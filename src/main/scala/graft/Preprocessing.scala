@@ -269,24 +269,37 @@ object Preprocessing {
     * The cleaned frame is persisted across the barriers: the prune, mode,
     * quantile, and encoding aggregates each re-traverse it, and without a
     * persist every one of those tiny collects re-runs the full clean plan
-    * from the scan (at 100 TB that is 4+ extra table scans).
+    * from the scan (at 100 TB that is 4+ extra table scans). It is released
+    * once the enriched (House-only) frame, the only thing still built from
+    * it, is an eager [[graft.ops.Snapshot]]; that snapshot feeds the second
+    * prune and the barrier-3 aggregates, and is released in turn once the
+    * output is snapshotted.
+    *
+    * The output is an eager snapshot too, so the chain runs exactly once
+    * per call: every consumer of the returned frame (PreprocessJob's parquet
+    * AND csv writes, q60's aggregate) reads the one stored result instead of
+    * re-running the dedup shuffles, the geocode and city joins and the
+    * encoding joins from the scan, and two writes of it cannot disagree.
+    * Snapshotting, rather than persisting, the enriched frame keeps the
+    * output's partitioning what adaptive execution would pick for the
+    * uncached plan: a cached plan's output partitioning is never coalesced,
+    * and ModelJob's seeded splits depend on clean.parquet's file layout.
     */
   def run(export: DataFrame, geocodeCache: DataFrame): DataFrame = {
     val cleaned = cleanStage(export)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val enriched = try {
       val (pruned, _) = pruneStage(cleaned)
       val typed = typeStage(pruned)
       val (geocoded, _) = geocodeStage(typed, geocodeCache)
       // Subtype is consumed by the House filter and then dropped (:517), and
       // the prune re-runs on the filtered frame (:520) — the House subset can
       // exceed the null threshold on columns the full data did not.
-      val enriched = enrichStage(geocoded).drop("Subtype")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val (pruned2, _) = pruneStage(enriched)
-        finalStage(encodeStage(pruned2))
-      } finally enriched.unpersist(blocking = false)
+      Snapshot.eager(enrichStage(geocoded).drop("Subtype"))
     } finally cleaned.unpersist(blocking = false)
+    try {
+      val (pruned2, _) = pruneStage(enriched)
+      Snapshot.eager(finalStage(encodeStage(pruned2)))
+    } finally Snapshot.release(enriched)
   }
 }

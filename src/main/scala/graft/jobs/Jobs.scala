@@ -30,6 +30,14 @@ object JobSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
   }
+
+  /** A main's whole life: build the session, run `body`, and stop the
+    * session whether `body` succeeds or fails.
+    */
+  def run(appName: String)(body: SparkSession => Unit): Unit = {
+    val spark = build(appName)
+    try body(spark) finally spark.stop()
+  }
 }
 
 /** Task 1 — scrape: sitemap snapshot → link diff → scrape pending → parse →
@@ -43,11 +51,9 @@ object ScrapeJob {
     * the one production wiring. */
   def main(args: Array[String]): Unit = {
     val Array(linksDir, propertiesDir, indexXml) = args.take(3)
-    val spark = JobSession.build("graft-scrape")
-    try run(spark, linksDir, propertiesDir, indexXml,
+    JobSession.run("graft-scrape")(run(_, linksDir, propertiesDir, indexXml,
       new Sitemap.HttpFetcher(),
-      new java.sql.Timestamp(System.currentTimeMillis()))
-    finally spark.stop()
+      new java.sql.Timestamp(System.currentTimeMillis())))
   }
 
   def run(spark: SparkSession, linksDir: String, propertiesDir: String,
@@ -193,9 +199,7 @@ object ScrapeJob {
 object PreflightJob {
   def main(args: Array[String]): Unit = {
     val Array(linksDir, propertiesDir) = args.take(2)
-    val spark = JobSession.build("graft-preflight")
-    try run(spark, linksDir, propertiesDir)
-    finally spark.stop()
+    JobSession.run("graft-preflight")(run(_, linksDir, propertiesDir))
   }
 
   def run(spark: SparkSession, linksDir: String, propertiesDir: String): Unit = {
@@ -224,17 +228,24 @@ object PreflightJob {
 object ExportJob {
   def main(args: Array[String]): Unit = {
     val Array(propertiesDir, csvOut) = args.take(2)
-    val spark = JobSession.build("graft-export")
-    ExportCsv.write(spark.read.parquet(propertiesDir), csvOut)
-    spark.stop()
+    JobSession.run("graft-export")(run(_, propertiesDir, csvOut))
   }
+
+  def run(spark: SparkSession, propertiesDir: String, csvOut: String): Unit =
+    ExportCsv.write(spark.read.parquet(propertiesDir), csvOut)
 }
 
-/** Task 3 — preprocess: export CSV → cleaned/enriched/encoded parquet+csv. */
+/** Task 3 — preprocess: export CSV → cleaned/enriched/encoded parquet+csv.
+  * `Preprocessing.run` returns a materialized snapshot, so the two writes
+  * are two copies of one computation of the chain.
+  */
 object PreprocessJob {
   def main(args: Array[String]): Unit = {
     val Array(csvIn, cacheDir, outDir) = args.take(3)
-    val spark = JobSession.build("graft-preprocess")
+    JobSession.run("graft-preprocess")(run(_, csvIn, cacheDir, outDir))
+  }
+
+  def run(spark: SparkSession, csvIn: String, cacheDir: String, outDir: String): Unit = {
     val export = ExportCsv.read(spark, csvIn)
     val cache =
       if (ScrapeJob.pathExists(spark, cacheDir)) spark.read.parquet(cacheDir)
@@ -244,7 +255,6 @@ object PreprocessJob {
     out.write.mode("overwrite").parquet(s"$outDir/clean.parquet")
     out.coalesce(1).write.mode("overwrite").option("header", "true")
       .csv(s"$outDir/clean_csv")
-    spark.stop()
   }
 }
 
@@ -252,10 +262,16 @@ object PreprocessJob {
 object ModelJob {
   def main(args: Array[String]): Unit = {
     val Array(cleanDir, modelOut) = args.take(2)
-    val spark = JobSession.build("graft-model")
+    JobSession.run("graft-model")(run(_, cleanDir, modelOut))
+  }
+
+  def run(spark: SparkSession, cleanDir: String, modelOut: String): Unit = {
     val df = spark.read.parquet(s"$cleanDir/clean.parquet")
       .drop("price_per_sqm", "price_per_sqm_land", "epc", "Postal_code") // P10
     val features = Models.selectFeaturesByCorrelation(df, "Price")
+    require(features.nonEmpty,
+      "no feature passes the |corr| >= 0.1 gate against target column Price " +
+        s"in $cleanDir/clean.parquet; nothing to train on")
     val (winner, all) = Models.selectBestModel(df, features, "Price")
     Models.leaderboard(spark, all)
       .coalesce(1).write.mode("overwrite").option("header", "true")
@@ -266,6 +282,5 @@ object ModelJob {
       .coalesce(1).write.mode("overwrite").option("header", "true")
       .csv(s"$modelOut/sample_predictions")
     winner.model.write.overwrite().save(s"$modelOut/best_model")
-    spark.stop()
   }
 }

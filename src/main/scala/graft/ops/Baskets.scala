@@ -36,7 +36,6 @@ object Baskets {
   def pairLift(df: DataFrame, basket: Column, item: Column,
       minCount: Long = 2L, k: Int = 20,
       maxBasketSize: Int = 1000): DataFrame = {
-    val spark = df.sparkSession
     // r14: spread an under-partitioned scan before the presence distinct —
     // a one-split input serializes the partial-distinct map stage on one
     // core (no-op on well-split inputs; distinct is order-independent)
@@ -46,10 +45,7 @@ object Baskets {
         col("b"), col("i"))
       .distinct()
     // snapshot: presence feeds N, the supports, and BOTH self-join sides
-    val presence =
-      if (spark.sparkContext.getCheckpointDir.isDefined)
-        presenceRaw.checkpoint(eager = true)
-      else presenceRaw.localCheckpoint(eager = true)
+    val presence = Snapshot.eager(presenceRaw)
     val keptBaskets = presence.groupBy("b").agg(count(lit(1)).as("__bs"))
       .filter(col("__bs") <= maxBasketSize)
       .select("b")

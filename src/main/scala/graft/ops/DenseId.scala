@@ -29,26 +29,16 @@ object DenseId {
 
   def withDenseId(df: DataFrame, orderCols: Seq[String],
       out: String = "dense_id"): DataFrame = {
-    val spark = df.sparkSession
-    // eager checkpoint, not persist: the frame is traversed twice (counts,
+    // eager snapshot, not persist: the frame is traversed twice (counts,
     // then the id projection) and the snapshot both guarantees the two
     // passes see identical partition layouts and cuts the lineage instead
-    // of leaving a cache entry behind. Reliable checkpoint when a
-    // checkpoint dir is configured (cluster: survives executor loss —
-    // localCheckpoint blocks are pinned to executors and die with them).
-    // The single checkpoint here IS the returned frame, so it cannot be
-    // reclaimed in-function; enable
-    // spark.cleaner.referenceTracking.cleanCheckpoints=true alongside
-    // setCheckpointDir so the dir is GC'd when the frame is dropped.
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    val snapshot = df
+    // of leaving a cache entry behind. The snapshot IS the returned frame,
+    // so it cannot be reclaimed in-function (see [[Snapshot]]).
+    val sorted = Snapshot.eager(df
       .repartitionByRange(orderCols.map(col): _*)
       .sortWithinPartitions(orderCols.map(col): _*)
       .withColumn(P, spark_partition_id())
-      .withColumn(M, monotonically_increasing_id())
-    val sorted =
-      if (reliable) snapshot.checkpoint(eager = true)
-      else snapshot.localCheckpoint(eager = true)
+      .withColumn(M, monotonically_increasing_id()))
 
     // Per-partition counts AND the local-ordinal extrema in one aggregate.
     // The extrema are a layout guard: local index = low 33 bits of

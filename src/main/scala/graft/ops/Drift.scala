@@ -248,9 +248,7 @@ object Drift {
     // eager snapshot: traversed twice (offset totals, then the scored
     // pass), and the snapshot pins one partition layout for both — the
     // DenseId checkpoint pattern (reliable when a dir is configured)
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) hist.checkpoint(eager = true)
-      else hist.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(hist)
 
     val partTotals = snap.groupBy("__pid")
       .agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"))
@@ -300,9 +298,7 @@ object Drift {
       // pass's window re-sorts its partition regardless, so the pre-sort
       // only made the snapshot materialization pay an extra pass
       .withColumn("__pid", spark_partition_id())
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) hist.checkpoint(eager = true)
-      else hist.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(hist)
     val partTotals = snap.groupBy("__pid")
       .agg(sum(col("c")).as("t"))
       .collect().map(r => (r.getInt(0), r.getLong(1)))
@@ -354,9 +350,7 @@ object Drift {
       // pass's window re-sorts its partition regardless, so the pre-sort
       // only made the snapshot materialization pay an extra pass
       .withColumn("__pid", spark_partition_id())
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) hist.checkpoint(eager = true)
-      else hist.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(hist)
     val partTotals = snap.groupBy("__pid")
       .agg(sum(col("c")).as("t"))
       .collect().map(r => (r.getInt(0), r.getLong(1)))
@@ -398,7 +392,6 @@ object Drift {
     */
   def vocabJaccardPairs(docs: DataFrame, group: Column,
       text: Column): DataFrame = {
-    val spark = docs.sparkSession
     // under-partitioned-scan guard before the per-char token explode
     // (size-floored; see graft.ops.Spread)
     val vocabRaw = graft.ops.Spread.forAmplification(docs)
@@ -407,9 +400,7 @@ object Drift {
       .filter(length(col("t")) > 0)
       .distinct()
     // snapshot: feeds the size table and BOTH sides of the term join
-    val vocab =
-      if (spark.sparkContext.getCheckpointDir.isDefined) vocabRaw.checkpoint(eager = true)
-      else vocabRaw.localCheckpoint(eager = true)
+    val vocab = Snapshot.eager(vocabRaw)
     val sizes = vocab.groupBy("g").agg(count(lit(1)).as("nv"))
     val inter = vocab.select(col("g").as("a"), col("t"))
       .join(vocab.select(col("g").as("b"), col("t")), Seq("t"))
@@ -463,9 +454,7 @@ object Drift {
       // pass's window re-sorts its partition regardless, so the pre-sort
       // only made the snapshot materialization pay an extra pass
       .withColumn("__pid", spark_partition_id())
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) hist.checkpoint(eager = true)
-      else hist.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(hist)
     val partTotals = snap.groupBy("__pid")
       .agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"), min(col("v")).as("mn"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -538,9 +527,7 @@ object Drift {
       // pass's window re-sorts its partition regardless, so the pre-sort
       // only made the snapshot materialization pay an extra pass
       .withColumn("__pid", spark_partition_id())
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) hist.checkpoint(eager = true)
-      else hist.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(hist)
     val partTotals = snap.groupBy("__pid")
       .agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))

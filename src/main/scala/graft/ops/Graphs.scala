@@ -24,15 +24,12 @@ object Graphs {
     * closing-edge equi join on the canonical (u, v) pair, one count.
     */
   def triangleCount(edges: DataFrame, src: Column, dst: Column): DataFrame = {
-    val spark = edges.sparkSession
     val canonRaw = edges
       .select(least(src, dst).as("u"), greatest(src, dst).as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct()
     // snapshot: canon feeds degrees, both wedge legs, and the closing join
-    val canon =
-      if (spark.sparkContext.getCheckpointDir.isDefined) canonRaw.checkpoint(eager = true)
-      else canonRaw.localCheckpoint(eager = true)
+    val canon = Snapshot.eager(canonRaw)
     val deg = canon.select(col("u").as("n")).unionAll(canon.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val withDeg = canon
@@ -81,10 +78,7 @@ object Graphs {
     require(rounds >= 1 && rounds <= 32, s"rounds must be in [1,32], got $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    def snap(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-    var cur = snap(edges
+    var cur = Snapshot.eager(edges
       .select(least(src, dst).as("u"), greatest(src, dst).as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct())
@@ -112,9 +106,9 @@ object Graphs {
       // aggregate each time; and broadcast it into the semi joins so the
       // edge table is never shuffled during a peel (keep is node-scale,
       // the PageRank/HITS broadcast-score budget).
-      val keep = snap(endpoints(cur).groupBy("n").agg(count(lit(1)).as("d"))
+      val keep = Snapshot.eager(endpoints(cur).groupBy("n").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("n"))
-      cur = snap(cur
+      cur = Snapshot.eager(cur
         .join(broadcast(keep.select(col("n").as("u"))), Seq("u"), "left_semi")
         .join(broadcast(keep.select(col("n").as("v"))), Seq("v"), "left_semi")
         .select("u", "v"))

@@ -38,13 +38,9 @@ object Hits {
     // 2·iterations times (each half-iteration joins it) and the returned
     // plan is evaluated AFTER run() exits, so a deferred persist paired
     // with an immediate unpersist would never materialize — the snapshot
-    // materializes once here and needs no lifecycle management (reliable
-    // checkpoint on a cluster, localCheckpoint otherwise)
+    // materializes once here and needs no lifecycle management
     val spark = edges.sparkSession
-    val eRaw = edges.select(col("src"), col("dst"))
-    val e =
-      if (spark.sparkContext.getCheckpointDir.isDefined) eRaw.checkpoint(eager = true)
-      else eRaw.localCheckpoint(eager = true)
+    val e = Snapshot.eager(edges.select(col("src"), col("dst")))
 
     // r14 (guide §1.2 "the distributed algorithm" / §5 caching): each raw
     // score table is SNAPSHOT before normalizing. l1Normalize references its
@@ -59,24 +55,7 @@ object Hits {
     // materializes, so a long run keeps at most one hub and one auth dir
     // alive instead of leaking 2×iterations dirs. The final hub/auth
     // snapshots back the returned plan and are never deleted here.
-    // (localCheckpoint blocks are cleaned by the BlockManager.)
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    val prevCkptByRole =
-      scala.collection.mutable.Map.empty[String, Option[String]]
-    def snap(df: DataFrame, role: String): DataFrame = {
-      val out =
-        if (reliable) df.checkpoint(eager = true)
-        else df.localCheckpoint(eager = true)
-      if (reliable) {
-        prevCkptByRole.getOrElse(role, None).foreach { f =>
-          val pth = new org.apache.hadoop.fs.Path(f)
-          pth.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(pth, true)
-        }
-        prevCkptByRole(role) = PageRank.checkpointFileOf(out)
-      }
-      out
-    }
+    val snapHub, snapAuth = new Snapshot.Rolling(spark)
     def l1Normalize(df: DataFrame, score: String): DataFrame = {
       val tot = df.agg(
         sum(col(score).cast("decimal(28,12)")).cast("double").as("__tot"))
@@ -92,15 +71,13 @@ object Hits {
       .withColumn("a", lit(1.0))
     var hub: DataFrame = null
     for (_ <- 1 to iterations) {
-      val hRaw = snap(e.join(side(auth, "dst"), "dst")
+      val hRaw = snapHub(e.join(side(auth, "dst"), "dst")
         .groupBy(col("src").as("node"))
-        .agg(sum(col("a").cast("decimal(28,12)")).cast("double").as("h")),
-        "hub")
+        .agg(sum(col("a").cast("decimal(28,12)")).cast("double").as("h")))
       hub = l1Normalize(hRaw, "h")
-      val aRaw = snap(e.join(side(hub, "src"), "src")
+      val aRaw = snapAuth(e.join(side(hub, "src"), "src")
         .groupBy(col("dst").as("node"))
-        .agg(sum(col("h").cast("decimal(28,12)")).cast("double").as("a")),
-        "auth")
+        .agg(sum(col("h").cast("decimal(28,12)")).cast("double").as("a")))
       auth = l1Normalize(aRaw, "a")
     }
     hub

@@ -42,30 +42,10 @@ object PageRank {
 
   def run(edges: DataFrame, iterations: Int, damping: Double = 0.85,
       broadcastRanks: Boolean = true): DataFrame = {
-    val spark = edges.sparkSession
-    // reliable checkpoint when the session has a checkpoint dir configured
-    // (HDFS/S3 — survives executor loss); localCheckpoint otherwise (local
-    // mode / tests — blocks die with their executors, which is fine there)
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    // Superseded reliable-checkpoint dirs are deleted as soon as the next
-    // checkpoint materializes — a long iterative run keeps at most two
-    // checkpoint dirs alive (current + in-flight) instead of accumulating
-    // one per cadence tick. (localCheckpoint blocks are cleaned by the
-    // BlockManager; only the reliable path leaves dirs behind.) The FINAL
-    // checkpoint is the caller's result and is never deleted here.
-    var prevCkptFile: Option[String] = None
-    def ckpt(df: DataFrame): DataFrame = {
-      val out =
-        if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
-      if (reliable) {
-        prevCkptFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-        }
-        prevCkptFile = checkpointFileOf(out)
-      }
-      out
-    }
+    // a long run keeps at most two checkpoint dirs alive (current +
+    // in-flight), not one per cadence tick; the FINAL checkpoint is the
+    // caller's result and is never deleted here
+    val ckpt = new Snapshot.Rolling(edges.sparkSession)
     // persisted: the node set re-enters the plan every iteration (rank
     // re-base + teleport join); without the cache each iteration re-scans
     // and re-distincts the edge list
@@ -115,14 +95,4 @@ object PageRank {
     edgesDeg.unpersist(blocking = false)
     out
   }
-
-  /** The reliable-checkpoint dir backing a just-checkpointed frame:
-    * Dataset.checkpoint returns a plan rooted at a LogicalRDD over the
-    * checkpointed internal RDD, whose getCheckpointFile is the dir to
-    * reclaim once superseded.
-    */
-  private[ops] def checkpointFileOf(df: DataFrame): Option[String] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.flatMap(_.getCheckpointFile)
 }

@@ -48,9 +48,7 @@ object Ranked {
       .withColumn(PID, spark_partition_id())
     // eager snapshot: traversed twice (offset totals, then the ranked
     // pass) — pins one partition layout for both and cuts lineage
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) snapshot0.checkpoint(eager = true)
-      else snapshot0.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(snapshot0)
     val partials = snap.groupBy(col(PID))
       .agg(count(lit(1)).as("c"), sum(col(V)).as("s"))
       .collect()

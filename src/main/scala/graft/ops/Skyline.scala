@@ -39,9 +39,7 @@ object Skyline {
       .repartitionByRange(partitions, col("x"))
       .sortWithinPartitions("x")
       .withColumn("__pid", spark_partition_id())
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) perX.checkpoint(eager = true)
-      else perX.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(perX)
     val partMins = snap.groupBy("__pid").agg(min(col("ymin")).as("m"))
       .collect().map(r => (r.getInt(0), r.getDouble(1)))
       .sortBy(_._1)

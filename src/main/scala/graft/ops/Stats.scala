@@ -652,9 +652,7 @@ object Stats {
       .withColumn("__pid", spark_partition_id())
     // eager snapshot: traversed twice (offset totals, scored pass) and the
     // snapshot pins ONE partition layout for both
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) hist.checkpoint(eager = true)
-      else hist.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(hist)
     val partTotals = snap.groupBy("__pid")
       .agg(sum(col("np") + col("nn")).as("t"),
         sum(col("np")).as("tp"), sum(col("nn")).as("tn"))
@@ -770,10 +768,7 @@ object Stats {
     // eager snapshot of the bounded cell table: it feeds the a-marginal,
     // the b-marginal AND the dense-grid join — without it each consumer
     // re-derives the aggregate from its own table scan (3 data passes)
-    val spark = df.sparkSession
-    val obs =
-      if (spark.sparkContext.getCheckpointDir.isDefined) cells.checkpoint(eager = true)
-      else cells.localCheckpoint(eager = true)
+    val obs = Snapshot.eager(cells)
     val ma = obs.groupBy("ca", "cb", "a").agg(sum(col("o")).as("na"))
     val mb = obs.groupBy("ca", "cb", "b").agg(sum(col("o")).as("nb"))
     val grid = ma.join(broadcast(mb), Seq("ca", "cb")) // per-pair report grid
@@ -863,9 +858,7 @@ object Stats {
       // re-sorts its partition regardless, so the pre-sort only made the
       // snapshot materialization pay an extra spill-prone pass
       .withColumn("__pid", spark_partition_id())
-    val hsnap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) hist.checkpoint(eager = true)
-      else hist.localCheckpoint(eager = true)
+    val hsnap = Snapshot.eager(hist)
     val partTotals = hsnap.groupBy("__pid", "axis")
       .agg(sum(col("cnt")).as("t"))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
@@ -1257,9 +1250,7 @@ object Stats {
       // pass's window re-sorts its partition regardless, so the pre-sort
       // only made the snapshot materialization pay an extra pass
       .withColumn("__pid", spark_partition_id())
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) base.checkpoint(eager = true)
-      else base.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(base)
     // one bounded collect: per-(pid, group) weight totals and value counts
     val partTotals = snap.groupBy("__pid", group)
       .agg(sum(col("w")).as("t"), count(lit(1)).as("c"))

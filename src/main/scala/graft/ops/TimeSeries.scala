@@ -123,10 +123,7 @@ object TimeSeries {
   def theilSen(series: DataFrame, t: Column, y: Column): DataFrame = {
     val base = series.select(t.cast("double").as("t"), y.cast("double").as("y"))
       .filter(col("t").isNotNull && col("y").isNotNull)
-    val spark = base.sparkSession
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) base.checkpoint(eager = true)
-      else base.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(base)
     val pairs = snap.select(col("t").as("t1"), col("y").as("y1"))
       .join(snap.select(col("t").as("t2"), col("y").as("y2")),
         col("t1") < col("t2"))
@@ -161,10 +158,7 @@ object TimeSeries {
     val base = series.select(col(group).as("g"), t.cast("double").as("t"),
         y.cast("double").as("y"))
       .filter(col("g").isNotNull && col("t").isNotNull && col("y").isNotNull)
-    val spark = base.sparkSession
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) base.checkpoint(eager = true)
-      else base.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(base)
     val slopes = snap.select(col("g"), col("t").as("t1"), col("y").as("y1"))
       .join(snap.select(col("g"), col("t").as("t2"), col("y").as("y2")),
         Seq("g"))
@@ -196,10 +190,7 @@ object TimeSeries {
   def mannKendall(series: DataFrame, t: Column, y: Column): DataFrame = {
     val base = series.select(t.cast("double").as("t"), y.cast("double").as("y"))
       .filter(col("t").isNotNull && col("y").isNotNull)
-    val spark = base.sparkSession
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) base.checkpoint(eager = true)
-      else base.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(base)
     val s = snap.select(col("t").as("t1"), col("y").as("y1"))
       .join(snap.select(col("t").as("t2"), col("y").as("y2")),
         col("t1") < col("t2"))
@@ -379,10 +370,7 @@ object TimeSeries {
     val base = series.select(x.cast("double").as("x"), y.cast("double").as("y"))
       .filter(col("x").isNotNull && col("y").isNotNull)
       .withColumn("__i", monotonically_increasing_id())
-    val spark = base.sparkSession
-    val snap =
-      if (spark.sparkContext.getCheckpointDir.isDefined) base.checkpoint(eager = true)
-      else base.localCheckpoint(eager = true)
+    val snap = Snapshot.eager(base)
     val pairs = snap.select(col("__i").as("i1"), col("x").as("x1"), col("y").as("y1"))
       .join(snap.select(col("__i").as("i2"), col("x").as("x2"), col("y").as("y2")),
         col("i1") < col("i2"))

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Snapshot
 import Similarity.{asDouble, dist2, lloydCentroids, nearestCell, topKPerQuery}
 
 /** Product quantization (Jégou et al. 2011): split each `dim`-vector into
@@ -219,7 +220,6 @@ object Pq {
       trainOn: Option[DataFrame] = None): IvfPqIndex = {
     require(m >= 1 && dim % m == 0, s"ivfPq needs m | dim (got $m, $dim)")
     val sub = dim / m
-    val spark = corpus.sparkSession
     val trainDf = trainOn.getOrElse(corpus)
     val coarse = lloydCentroids(trainDf, idCol, vecCol, nLists, iters)
     if (coarse.isEmpty)
@@ -234,9 +234,7 @@ object Pq {
     // passes over them (the full corpus is never multi-passed when a
     // training sample is given)
     val trainRes0 = residualize(trainDf)
-    val trainRes =
-      if (spark.sparkContext.getCheckpointDir.isDefined) trainRes0.checkpoint(eager = true)
-      else trainRes0.localCheckpoint(eager = true)
+    val trainRes = Snapshot.eager(trainRes0)
     val books = pqCodebooks(trainRes, "cid", "__r", dim, m, ksub, iters)
     if (books.exists(_.isEmpty))
       return IvfPqIndex(Nil, Nil, corpus.sparkSession.emptyDataFrame)
@@ -250,8 +248,7 @@ object Pq {
       if (trainOn.isEmpty) trainRes
       else {
         val r0 = residualize(corpus).select("cid", "cell", "__r")
-        if (spark.sparkContext.getCheckpointDir.isDefined) r0.checkpoint(eager = true)
-        else r0.localCheckpoint(eager = true)
+        Snapshot.eager(r0)
       }
     // slices hoisted before the nearest-cell trees — see [[pqEncode]]
     val codes = codesProjection(encSrc, books, sub)
@@ -285,7 +282,6 @@ object Pq {
       idCol: String, vecCol: String): DataFrame = {
     val dim = coarse.head._2.size
     val sub = dim / books.size
-    val spark = batch.sparkSession
     val centMap = typedlit(coarse.map { case (c, v) => c -> v }.toMap)
     val r0 = batch
       .select(col(idCol).as("cid"), asDouble(col(vecCol)).as("__v"))
@@ -293,10 +289,7 @@ object Pq {
       .withColumn("__r", Similarity.vecSub(col("__v"),
         element_at(centMap, col("cell"))))
       .select("cid", "cell", "__r")
-    val rs =
-      if (spark.sparkContext.getCheckpointDir.isDefined)
-        r0.checkpoint(eager = true)
-      else r0.localCheckpoint(eager = true)
+    val rs = Snapshot.eager(r0)
     codesProjection(rs, books, sub)
   }
 

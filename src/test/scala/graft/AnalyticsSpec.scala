@@ -92,6 +92,30 @@ class AnalyticsSpec extends SparkSpec {
     }
   }
 
+  test("hits keeps one reliable checkpoint dir per role; a failed reclaim " +
+      "of a superseded dir is logged, not thrown") {
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("ckpt_hits").toString
+    sc.setCheckpointDir(dir)
+    try {
+      val edges = Seq(("a", "x"), ("b", "x"), ("a", "y")).toDF("src", "dst")
+      val got = graft.ops.Hits.run(edges, iterations = 3).count()
+      assert(got == 4)
+      // the edge snapshot plus the latest hub and auth snapshots back the
+      // result; the four superseded score snapshots were reclaimed
+      val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(p => java.nio.file.Files.isDirectory(p) &&
+          p.getFileName.toString.startsWith("rdd-"))
+        .count()
+      assert(rddDirs == 3, s"expected 3 surviving checkpoint dirs, found $rddDirs")
+      // a filesystem that cannot even be resolved is the harshest failure
+      graft.ops.Snapshot.reclaim(spark, "nosuchfs://nowhere/rdd-0")
+    } finally {
+      val f = sc.getClass.getDeclaredMethod("checkpointDir_$eq", classOf[Option[String]])
+      f.invoke(sc, None)
+    }
+  }
+
   test("resample+ffill: pre-1970 timestamps bucket with floor semantics, not truncation") {
     // -1800 s epoch: floor(-1800/3600) = -1 -> bucket -3600; truncation
     // toward zero would misplace it in bucket 0

@@ -84,6 +84,24 @@ class PreprocessingSpec extends SparkSpec {
       Seq("East Flanders"))
   }
 
+  test("run returns a materialized snapshot: no consumer can re-run the " +
+      "chain from the file scan") {
+    val path = java.nio.file.Files.createTempDirectory("export").toString + "/t"
+    fixture.write.parquet(path)
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Preprocessing.run(spark.read.parquet(path), emptyCache)
+    val leaves = out.queryExecution.optimizedPlan.collectLeaves()
+    val snapshots = leaves.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(snapshots.nonEmpty && snapshots.size == leaves.size,
+      s"returned plan still reads its inputs: ${leaves.map(_.nodeName)}")
+    // the cleaned and enriched persists are released: the only blocks run
+    // leaves behind are the snapshot's own
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore ==
+      snapshots.toSet)
+  }
+
   test("state remap folds rare categories with fallback") {
     val out = Preprocessing.run(fixture, emptyCache)
     val states = out.select("State_of_building").distinct().as[String].collect().toSet

@@ -127,6 +127,68 @@ class JobsSpec extends SparkSpec {
     }
   }
 
+  /** A small properties store in the declared shape: mostly houses around
+    * Ghent with prices that follow living area, plus apartments (dropped by
+    * the House filter), a duplicate address and rare state/epc values.
+    */
+  private def propertiesFixture: org.apache.spark.sql.DataFrame = {
+    val rows = (0 until 60).map { i =>
+      val subtype = Seq("HOUSE", "VILLA", "HOUSE", "APARTMENT", "TOWN_HOUSE")(i % 5)
+      val area = 90 + (i * 37) % 160
+      val a = if (i == 59) 0 else i // row 59 repeats row 0's address
+      org.apache.spark.sql.Row(i.toLong, 1000L + i, s"Gent_${a % 4}",
+        s"90${"%02d".format(a % 50)}", s"straat_$a", s"$a",
+        s"${150000 + area * 1800 + (i % 11) * 4000}", "HOUSE", subtype,
+        2 + i % 4, s"$area", "INSTALLED", if (i % 3 == 0) "true" else "false",
+        "false", "true", s"${10 + i % 20}", "true", s"${i * 7 % 300}", 2 + i % 3,
+        Seq("GOOD", "AS_NEW", "TO_RESTORE", "GOOD", "JUST_RENOVATED")(i % 5),
+        1950 + i, Seq("A", "B", "C", "D", "A+", "G")(i % 6),
+        f"${51.0 + (a % 9) * 0.01}%.4f", f"${3.7 + (a % 7) * 0.01}%.4f",
+        s"${200 + i * 13 % 900}", java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      graft.schema.Schemas.properties)
+  }
+
+  test("ExportJob -> PreprocessJob end-to-end: the parquet and the csv hold " +
+      "the same rows, as many as Preprocessing.run keeps") {
+    val base = java.nio.file.Files.createTempDirectory("train").toString
+    val (props, csv, clean) = (s"$base/properties", s"$base/export_csv", s"$base/clean")
+    propertiesFixture.write.parquet(props)
+    // the mains' bodies; each main wraps its body in a session it then stops
+    ExportJob.run(spark, props, csv)
+    PreprocessJob.run(spark, csv, s"$base/no_geocache", clean)
+    val parquet = spark.read.parquet(s"$clean/clean.parquet")
+    val csvRows = spark.read.schema(parquet.schema).option("header", "true")
+      .csv(s"$clean/clean_csv")
+    val n = parquet.count()
+    assert(n > 0)
+    assert(csvRows.count() == n)
+    assert(parquet.exceptAll(csvRows).isEmpty && csvRows.exceptAll(parquet).isEmpty,
+      "clean.parquet and clean_csv disagree")
+    val emptyCache = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      graft.enrich.Geocode.cacheSchema)
+    assert(graft.Preprocessing.run(graft.io.ExportCsv.read(spark, csv), emptyCache)
+      .count() == n)
+  }
+
+  test("ModelJob fails with a clear error when no feature passes the " +
+      "correlation gate") {
+    val base = java.nio.file.Files.createTempDirectory("model").toString
+    // Price is symmetric about the middle row and both features are
+    // antisymmetric about it: every |corr| is 0, below the 0.1 gate
+    (1 to 9).map(i => (i.toDouble, 100000.0 + (i - 5) * (i - 5) * 1000.0,
+        3 + Integer.signum(i - 5)))
+      .toDF("Living_area", "Price", "Number_of_facades")
+      .write.parquet(s"$base/clean/clean.parquet")
+    val e = intercept[IllegalArgumentException] {
+      ModelJob.run(spark, s"$base/clean", s"$base/model")
+    }
+    assert(e.getMessage.contains("|corr| >= 0.1") && e.getMessage.contains("Price"),
+      e.getMessage)
+  }
+
   test("graft_dot is callable from SQL after registration") {
     graft.functions.GraftFunctions.register(spark)
     val got = spark.sql(
