@@ -6,7 +6,7 @@ import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.regression.{GBTRegressor, LinearRegression, RandomForestRegressor}
 import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Aggregates
@@ -31,9 +31,20 @@ object Models {
         && f.name != target => f.name
     }.toSeq
     if (numeric.isEmpty) return Nil
-    val aggs = numeric.map(c => corr(col(c), col(target)).as(c))
+    // corr divides by both standard deviations, which ANSI mode turns into
+    // DIVIDE_BY_ZERO when either side is constant over the rows where both
+    // are non-null: such a column has no correlation and fails the gate,
+    // so only the columns that vary there enter the corr pass
+    val y = col(target)
+    def paired(c: String, v: Column) = when(col(c).isNotNull && y.isNotNull, v)
+    val spreads = numeric.map(c =>
+      (var_pop(paired(c, col(c))) > 0 && var_pop(paired(c, y)) > 0).as(c))
+    val spread = df.agg(spreads.head, spreads.tail: _*).head()
+    val varying = numeric.filter(c => spread.getAs[Any](c) == true)
+    if (varying.isEmpty) return Nil
+    val aggs = varying.map(c => corr(col(c), y).as(c))
     val row = df.agg(aggs.head, aggs.tail: _*).head()
-    numeric.filter { c =>
+    varying.filter { c =>
       val r = row.getAs[Any](c)
       r != null && math.abs(r.asInstanceOf[Double]) >= threshold
     }

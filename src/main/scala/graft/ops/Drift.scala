@@ -217,12 +217,10 @@ object Drift {
     *
     * Scale shape — the ECDF is computed DISTRIBUTED, never on one node:
     * ties collapse first (groupBy value: per-value a/b counts, map-side
-    * combined), the value axis is range-partitioned, and the cumulative
-    * counts are per-partition prefix sums plus per-partition offsets. The
-    * only driver barrier is the ≤`partitions`-row offset table — the same
-    * two-pass prefix-sum shape as DenseId, NOT a single-partition global
-    * window (which would serialize the whole distinct-value set through
-    * one task at 100 TB).
+    * combined) and the cumulative counts come from [[RangeScan.prefix]]
+    * over the value axis, whose only driver barrier is a ≤`partitions`-row
+    * offset table — NOT a single-partition global window (which would
+    * serialize the whole distinct-value set through one task at 100 TB).
     */
   def ksStatistic(a: DataFrame, b: DataFrame, value: Column,
       partitions: Int = 32): DataFrame = {
@@ -239,40 +237,16 @@ object Drift {
         side(a, 1, 0).unionByName(side(b, 0, 1)), col("v"))
       .groupBy("v")
       .agg(sum(col("__ia")).as("ca"), sum(col("__ib")).as("cb"))
-      .repartitionByRange(partitions, col("v"))
-      // r15: no sortWithinPartitions — range partitioning alone fixes the
-      // pid-to-value-order invariant the offsets rely on, and the scored
-      // pass's window re-sorts its partition regardless, so the pre-sort
-      // only made the snapshot materialization pay an extra pass
-      .withColumn("__pid", spark_partition_id())
-    // eager snapshot: traversed twice (offset totals, then the scored
-    // pass), and the snapshot pins one partition layout for both — the
-    // DenseId checkpoint pattern (reliable when a dir is configured)
-    val snap = Snapshot.eager(hist)
-
-    val partTotals = snap.groupBy("__pid")
-      .agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    val nA = partTotals.map(_._2).sum
-    val nB = partTotals.map(_._3).sum
+    val scan = RangeScan.prefix(hist, Nil, "v", Seq("ca", "cb"), partitions)
+    val (nA, nB) = (scan.total("ca"), scan.total("cb"))
     import spark.implicits._
     if (nA == 0L || nB == 0L)
       // KS is undefined against an empty sample — surface counts, null stat
       return Seq((nA, nB)).toDF("n_a", "n_b")
         .withColumn("ks_stat", lit(null).cast("double"))
-    // exclusive prefix offsets per partition id (≤`partitions` entries)
-    val offsets = partTotals.scanLeft((0, 0L, 0L)) {
-      case ((_, accA, accB), (pid, ta, tb)) => (pid, accA + ta, accB + tb)
-    }
-    val offDf = partTotals.map(_._1).zip(offsets.map(o => (o._2, o._3)))
-      .map { case (pid, (oa, ob)) => (pid, oa, ob) }
-      .toSeq.toDF("__pid", "offa", "offb")
-    val w = Window.partitionBy("__pid").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    snap.join(broadcast(offDf), "__pid")
-      .withColumn("fa", (col("offa") + sum(col("ca")).over(w)).cast("double") / nA)
-      .withColumn("fb", (col("offb") + sum(col("cb")).over(w)).cast("double") / nB)
+    scan.df
+      .withColumn("fa", col("__cum_ca").cast("double") / nA)
+      .withColumn("fb", col("__cum_cb").cast("double") / nB)
       .agg(max(round(abs(col("fa") - col("fb")), 6)).as("ks_stat"))
       .select(lit(nA).as("n_a"), lit(nB).as("n_b"), col("ks_stat"))
   }
@@ -280,9 +254,8 @@ object Drift {
   /** Distributed EXACT empirical CDF table: per distinct value its row
     * count and ECDF = P(X ≤ v) — the percentile-rank feature transform
     * (and the reusable half of [[ksStatistic]]), WITHOUT a global sort:
-    * tie-collapse groupBy, range partitioning by value, per-partition
-    * prefix sums, and a ≤`partitions`-row driver barrier for the
-    * exclusive offsets (the DenseId/KS scaffold). Joining a data table
+    * a tie-collapse groupBy, then [[RangeScan.prefix]] over the value
+    * axis (a ≤`partitions`-row driver barrier). Joining a data table
     * back on value turns this into a per-row percentile feature; the
     * table itself is the lossless Q-Q/calibration input. Output:
     * (value, n_rows, ecdf round-6) ordered by value. */
@@ -292,33 +265,14 @@ object Drift {
     val hist = df.select(value.cast("double").as("v"))
       .filter(col("v").isNotNull)
       .groupBy("v").agg(count(lit(1)).as("c"))
-      .repartitionByRange(partitions, col("v"))
-      // r15: no sortWithinPartitions — range partitioning alone fixes the
-      // pid-to-value-order invariant the offsets rely on, and the scored
-      // pass's window re-sorts its partition regardless, so the pre-sort
-      // only made the snapshot materialization pay an extra pass
-      .withColumn("__pid", spark_partition_id())
-    val snap = Snapshot.eager(hist)
-    val partTotals = snap.groupBy("__pid")
-      .agg(sum(col("c")).as("t"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-      .sortBy(_._1)
-    val n = partTotals.map(_._2).sum
+    val scan = RangeScan.prefix(hist, Nil, "v", Seq("c"), partitions)
+    val n = scan.total("c")
     import spark.implicits._
     if (n == 0L)
       return Seq.empty[(Double, Long, Double)]
         .toDF("value", "n_rows", "ecdf")
-    val offsets = partTotals.scanLeft((0, 0L)) {
-      case ((_, acc), (pid, t)) => (pid, acc + t)
-    }
-    val offDf = partTotals.map(_._1).zip(offsets.map(_._2))
-      .map { case (pid, off) => (pid, off) }
-      .toSeq.toDF("__pid", "off")
-    val w = Window.partitionBy("__pid").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    snap.join(broadcast(offDf), "__pid")
-      .withColumn("ecdf", round(
-        (col("off") + sum(col("c")).over(w)).cast("double") / n, 6))
+    scan.df
+      .withColumn("ecdf", round(col("__cum_c").cast("double") / n, 6))
       .select(col("v").as("value"), col("c").as("n_rows"), col("ecdf"))
       .orderBy("value")
   }
@@ -333,9 +287,8 @@ object Drift {
     * buckets (they share a value, so they share a bucket), which is why
     * per-bucket counts can deviate from n/k exactly where heavy ties sit.
     *
-    * Scale shape: identical to [[ecdfTable]] — tie-collapse groupBy,
-    * range partition, per-partition prefix sums, ≤`partitions`-row driver
-    * offset barrier; the bucket aggregation runs over distinct values.
+    * Scale shape: identical to [[ecdfTable]] — tie-collapse groupBy, then
+    * [[RangeScan.prefix]]; the bucket aggregation runs over distinct values.
     * Output: (bucket 1..k, lo, hi, n_rows) ordered by bucket. */
   def equiDepthHistogram(df: DataFrame, value: Column, nBuckets: Int = 10,
       partitions: Int = 32): DataFrame = {
@@ -344,34 +297,15 @@ object Drift {
     val hist = df.select(value.cast("double").as("v"))
       .filter(col("v").isNotNull)
       .groupBy("v").agg(count(lit(1)).as("c"))
-      .repartitionByRange(partitions, col("v"))
-      // r15: no sortWithinPartitions — range partitioning alone fixes the
-      // pid-to-value-order invariant the offsets rely on, and the scored
-      // pass's window re-sorts its partition regardless, so the pre-sort
-      // only made the snapshot materialization pay an extra pass
-      .withColumn("__pid", spark_partition_id())
-    val snap = Snapshot.eager(hist)
-    val partTotals = snap.groupBy("__pid")
-      .agg(sum(col("c")).as("t"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-      .sortBy(_._1)
-    val n = partTotals.map(_._2).sum
+    val scan = RangeScan.prefix(hist, Nil, "v", Seq("c"), partitions)
+    val n = scan.total("c")
     import spark.implicits._
     if (n == 0L)
       return Seq.empty[(Int, Double, Double, Long)]
         .toDF("bucket", "lo", "hi", "n_rows")
-    val offsets = partTotals.scanLeft((0, 0L)) {
-      case ((_, acc), (pid, t)) => (pid, acc + t)
-    }
-    val offDf = partTotals.map(_._1).zip(offsets.map(_._2))
-      .map { case (pid, off) => (pid, off) }
-      .toSeq.toDF("__pid", "off")
-    val w = Window.partitionBy("__pid").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    snap.join(broadcast(offDf), "__pid")
-      .withColumn("__cum", col("off") + sum(col("c")).over(w))
+    scan.df
       .withColumn("bucket", expr(
-        s"CAST((__cum * $nBuckets + $n - 1) DIV $n AS INT)"))
+        s"CAST((__cum_c * $nBuckets + $n - 1) DIV $n AS INT)"))
       .groupBy("bucket")
       .agg(min(col("v")).as("lo"), max(col("v")).as("hi"),
         sum(col("c")).as("n_rows"))
@@ -422,13 +356,12 @@ object Drift {
     * differ; W₁ says by how much value-mass must move). Returns ONE row
     * (n_a, n_b, w1 rounded 6).
     *
-    * Scale shape — same distributed-ECDF scaffold as [[ksStatistic]]: ties
-    * collapse map-side, the value axis is range-partitioned, cumulative
-    * counts are per-partition prefix sums + a ≤`partitions`-row offset
-    * table. The ∫dx needs each value's SUCCESSOR, which `lead` can't see
-    * across a partition edge — the per-partition min-value table (collected
-    * with the same bounded barrier) supplies each partition's boundary
-    * successor, so no single-partition window is ever planned.
+    * Scale shape — same distributed ECDF as [[ksStatistic]]: ties collapse
+    * map-side, cumulative counts come from [[RangeScan.prefix]]. The ∫dx
+    * needs each value's SUCCESSOR, which `lead` can't see across a
+    * partition edge — the scan's `__next` (each partition's boundary
+    * successor, from the same bounded collect) supplies it, so no
+    * single-partition window is ever planned.
     *
     * Cross-engine float contract: per-gap terms |ΔF|·Δx round to 8 and
     * DECIMAL-sum (order-independent), the total rounds to 6.
@@ -448,43 +381,19 @@ object Drift {
         side(a, 1, 0).unionByName(side(b, 0, 1)), col("v"))
       .groupBy("v")
       .agg(sum(col("__ia")).as("ca"), sum(col("__ib")).as("cb"))
-      .repartitionByRange(partitions, col("v"))
-      // r15: no sortWithinPartitions — range partitioning alone fixes the
-      // pid-to-value-order invariant the offsets rely on, and the scored
-      // pass's window re-sorts its partition regardless, so the pre-sort
-      // only made the snapshot materialization pay an extra pass
-      .withColumn("__pid", spark_partition_id())
-    val snap = Snapshot.eager(hist)
-    val partTotals = snap.groupBy("__pid")
-      .agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"), min(col("v")).as("mn"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(_._1)
-    val nA = partTotals.map(_._2).sum
-    val nB = partTotals.map(_._3).sum
+    val scan = RangeScan.prefix(hist, Nil, "v", Seq("ca", "cb"), partitions)
+    val (nA, nB) = (scan.total("ca"), scan.total("cb"))
     import spark.implicits._
     if (nA == 0L || nB == 0L)
       // W1 is undefined against an empty sample — surface counts, null stat
       return Seq((nA, nB)).toDF("n_a", "n_b")
         .withColumn("w1", lit(null).cast("double"))
-    val offsets = partTotals.scanLeft((0, 0L, 0L)) {
-      case ((_, accA, accB), (pid, ta, tb, _)) => (pid, accA + ta, accB + tb)
-    }
-    // each partition's boundary successor = the NEXT partition's min value
-    // (partitions are value-ranged, so pid order is value order); the last
-    // partition has none — its final row's gap term is 0 anyway (F_a=F_b=1)
-    val nextMins = partTotals.indices.map { i =>
-      if (i + 1 < partTotals.length) Some(partTotals(i + 1)._4) else None
-    }
-    val offDf = partTotals.indices.map { i =>
-      (partTotals(i)._1, offsets(i)._2, offsets(i)._3, nextMins(i))
-    }.toDF("__pid", "offa", "offb", "nextv")
-    val w = Window.partitionBy("__pid").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wl = Window.partitionBy("__pid").orderBy("v")
-    snap.join(broadcast(offDf), "__pid")
-      .withColumn("fa", (col("offa") + sum(col("ca")).over(w)).cast("double") / nA)
-      .withColumn("fb", (col("offb") + sum(col("cb")).over(w)).cast("double") / nB)
-      .withColumn("nv", coalesce(lead(col("v"), 1).over(wl), col("nextv")))
+    // the last partition has no successor — its final row's gap term is 0
+    // anyway (F_a = F_b = 1)
+    scan.df
+      .withColumn("fa", col("__cum_ca").cast("double") / nA)
+      .withColumn("fb", col("__cum_cb").cast("double") / nB)
+      .withColumn("nv", coalesce(lead(col("v"), 1).over(scan.window), col("__next")))
       .filter(col("nv").isNotNull)
       .withColumn("__t",
         round(abs(col("fa") - col("fb")) * (col("nv") - col("v")), 8)
@@ -500,9 +409,8 @@ object Drift {
     * more sensitive than KS to broad mid-distribution shifts, less to a
     * single extreme gap. Returns ONE row (n_a, n_b, cvm rounded 6).
     *
-    * Scale shape: identical distributed-ECDF scaffold as KS — tie-collapse
-    * groupBy, range-partitioned per-partition prefix sums, ≤`partitions`-
-    * row offset barrier. Per-value terms (fa−fb)²·(ca+cb) round to 8 and
+    * Scale shape: the same distributed ECDF as KS — tie-collapse groupBy,
+    * then [[RangeScan.prefix]]. Per-value terms (fa−fb)²·(ca+cb) round to 8 and
     * DECIMAL-sum (order-independent); the nm/(n+m)² scaling is one final
     * scalar multiply.
     */
@@ -521,36 +429,17 @@ object Drift {
         side(a, 1, 0).unionByName(side(b, 0, 1)), col("v"))
       .groupBy("v")
       .agg(sum(col("__ia")).as("ca"), sum(col("__ib")).as("cb"))
-      .repartitionByRange(partitions, col("v"))
-      // r15: no sortWithinPartitions — range partitioning alone fixes the
-      // pid-to-value-order invariant the offsets rely on, and the scored
-      // pass's window re-sorts its partition regardless, so the pre-sort
-      // only made the snapshot materialization pay an extra pass
-      .withColumn("__pid", spark_partition_id())
-    val snap = Snapshot.eager(hist)
-    val partTotals = snap.groupBy("__pid")
-      .agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    val nA = partTotals.map(_._2).sum
-    val nB = partTotals.map(_._3).sum
+    val scan = RangeScan.prefix(hist, Nil, "v", Seq("ca", "cb"), partitions)
+    val (nA, nB) = (scan.total("ca"), scan.total("cb"))
     import spark.implicits._
     if (nA == 0L || nB == 0L)
       return Seq((nA, nB)).toDF("n_a", "n_b")
         .withColumn("cvm", lit(null).cast("double"))
-    val offsets = partTotals.scanLeft((0, 0L, 0L)) {
-      case ((_, accA, accB), (pid, ta, tb)) => (pid, accA + ta, accB + tb)
-    }
-    val offDf = partTotals.map(_._1).zip(offsets.map(o => (o._2, o._3)))
-      .map { case (pid, (oa, ob)) => (pid, oa, ob) }
-      .toSeq.toDF("__pid", "offa", "offb")
-    val w = Window.partitionBy("__pid").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val scale = nA.toDouble * nB.toDouble /
       ((nA + nB).toDouble * (nA + nB).toDouble)
-    snap.join(broadcast(offDf), "__pid")
-      .withColumn("fa", (col("offa") + sum(col("ca")).over(w)).cast("double") / nA)
-      .withColumn("fb", (col("offb") + sum(col("cb")).over(w)).cast("double") / nB)
+    scan.df
+      .withColumn("fa", col("__cum_ca").cast("double") / nA)
+      .withColumn("fb", col("__cum_cb").cast("double") / nB)
       .withColumn("__t", round(
         (col("fa") - col("fb")) * (col("fa") - col("fb")) *
           (col("ca") + col("cb")).cast("double"), 8).cast("decimal(28,8)"))

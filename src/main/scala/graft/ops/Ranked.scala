@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * UNBOUNDED PRECEDING)` over a frame that SCALES WITH DATA (per-user,
   * per-item). The naive global ordered window funnels every row through
   * one task; this keeps the data distributed (the [[DenseId]] /
-  * Drift.ecdfTable pattern):
+  * [[RangeScan.prefix]] pattern):
   *
   *   1. range-repartition + in-partition sort on the order key;
   *   2. per-partition row counts and value totals (one tiny keyed

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *      exclusive-prefix-min, broadcast back — a point survives iff its y
   *      is strictly below the least of (its partition's exclusive running
   *      min, every earlier partition's min).
-  * The same Drift.ecdfTable/DenseId bounded-barrier contract: the only
+  * The same [[RangeScan.prefix]]/DenseId bounded-barrier contract: the only
   * collect is ≤#partitions rows.
   *
   * Output: (x, y, n_rows) ordered by x ascending (y strictly decreasing

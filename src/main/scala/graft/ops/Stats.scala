@@ -632,10 +632,9 @@ object Stats {
     * exact DECIMAL and the single final division is the only float op.
     *
     * Scale shape — global score ranks WITHOUT a global sort: ties collapse
-    * map-side (groupBy score), the score axis is range-partitioned, ranks
-    * are per-partition prefix sums plus a ≤`partitions`-row offset table
-    * collected to the driver (the ksStatistic / DenseId two-pass shape).
-    * No single-partition window anywhere — the 100 TB posture. */
+    * map-side (groupBy score), and ranks come from [[RangeScan.prefix]]
+    * over the score axis. No single-partition window anywhere — the
+    * 100 TB posture. */
   def aucRankSum(df: DataFrame, score: Column, label: Column,
       partitions: Int = 32): DataFrame = {
     val spark = df.sparkSession
@@ -644,40 +643,18 @@ object Stats {
         when(label, 1L).otherwise(0L).as("__p"))
       .groupBy("v")
       .agg(sum(col("__p")).as("np"), sum(lit(1L) - col("__p")).as("nn"))
-      .repartitionByRange(partitions, col("v"))
-      // r15: no sortWithinPartitions — range partitioning alone fixes the
-      // pid-to-value-order invariant the offsets rely on, and the scored
-      // pass's window re-sorts its partition regardless, so the pre-sort
-      // only made the snapshot materialization pay an extra pass
-      .withColumn("__pid", spark_partition_id())
-    // eager snapshot: traversed twice (offset totals, scored pass) and the
-    // snapshot pins ONE partition layout for both
-    val snap = Snapshot.eager(hist)
-    val partTotals = snap.groupBy("__pid")
-      .agg(sum(col("np") + col("nn")).as("t"),
-        sum(col("np")).as("tp"), sum(col("nn")).as("tn"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._1)
-    val nPos = partTotals.map(_._3).sum
-    val nNeg = partTotals.map(_._4).sum
+    val scan = RangeScan.prefix(hist, Nil, "v", Seq("np", "nn"), partitions)
+    val (nPos, nNeg) = (scan.total("np"), scan.total("nn"))
     import spark.implicits._
     if (nPos == 0L || nNeg == 0L)
       // AUC is undefined with a one-class sample — surface counts, null stat
       return Seq((nPos, nNeg)).toDF("n_pos", "n_neg")
         .withColumn("auc", lit(null).cast("double"))
-    val offsets = partTotals.scanLeft((0, 0L)) {
-      case ((_, acc), (pid, t, _, _)) => (pid, acc + t)
-    }
-    val offDf = partTotals.map(_._1).zip(offsets.map(_._2))
-      .map { case (pid, off) => (pid, off) }
-      .toSeq.toDF("__pid", "off")
-    val w = Window.partitionBy("__pid").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val m = col("np") + col("nn")                    // tied-block size
     // 2·Σ_pos avgRank, exactly: np·(2·before + m + 1) summed as DECIMAL
     // (window materialized BEFORE the aggregate — Spark forbids nesting)
-    val s2 = snap.join(broadcast(offDf), "__pid")
-      .withColumn("__before", col("off") + sum(m).over(w) - m) // ranked below v
+    val s2 = scan.df
+      .withColumn("__before", col("__cum_np") + col("__cum_nn") - m) // ranked below v
       .agg(sum((col("np") * (lit(2) * col("__before") + m + 1))
         .cast("decimal(38,0)")).as("s2"))
     // subtract the two ~n² terms in DECIMAL (exact), THEN go to double: a
@@ -812,14 +789,12 @@ object Stats {
     * to the common ×2 scaling.
     *
     * Scale shape — global ranks WITHOUT a global sort, per axis: ties
-    * collapse map-side (groupBy value), the value axis range-partitions,
-    * ranks are per-partition prefix sums + a ≤`partitions`-row offset
-    * table (the ksStatistic/aucRankSum two-pass shape). The rank tables
+    * collapse map-side (groupBy value) and ranks come from
+    * [[RangeScan.prefix]] keyed by axis. The rank tables
     * (≤#distinct values) join back to rows by value — two keyed shuffles
     * of data, no single-partition window anywhere. */
   def spearman(df: DataFrame, x: Column, y: Column,
       partitions: Int = 32): DataFrame = {
-    val spark = df.sparkSession
     // r14: spread an under-partitioned scan BEFORE the snapshot — the
     // snapshot freezes the scan's partitioning, so a one-split input would
     // otherwise serialize both rank-histogram aggregates and the scoring
@@ -843,36 +818,16 @@ object Stats {
     // r14: BOTH rank tables from ONE stacked pass — the per-axis builds
     // each paid a histogram aggregate, a repartitionByRange (whose range
     // sampling is its own job), a snapshot and an offsets collect; stacking
-    // (axis, v) halves that. Range partitioning on (axis, v) keeps each
-    // axis's values globally ordered; prefix sums window per (pid, axis)
-    // and offsets scan per axis in pid order, so every rank is IDENTICAL
-    // to the per-axis build (2·#below + tiecount + 1, exact integers).
+    // (axis, v) halves that. Keying the scan by axis keeps each axis's
+    // values globally ordered, so every rank is IDENTICAL to the per-axis
+    // build (2·#below + tiecount + 1, exact integers).
     val hist = data.select(explode(array(
         struct(lit(0).as("axis"), col("x").as("v")),
         struct(lit(1).as("axis"), col("y").as("v")))).as("av"))
       .groupBy(col("av.axis").as("axis"), col("av.v").as("v"))
       .agg(count(lit(1)).as("cnt"))
-      .repartitionByRange(partitions, col("axis"), col("v"))
-      // r15: no sortWithinPartitions — range partitioning alone fixes the
-      // pid→value-order invariant the offsets rely on; the rank window
-      // re-sorts its partition regardless, so the pre-sort only made the
-      // snapshot materialization pay an extra spill-prone pass
-      .withColumn("__pid", spark_partition_id())
-    val hsnap = Snapshot.eager(hist)
-    val partTotals = hsnap.groupBy("__pid", "axis")
-      .agg(sum(col("cnt")).as("t"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    import spark.implicits._
-    val offDf = partTotals.groupBy(_._2).toSeq.flatMap { case (axis, rows) =>
-      val sorted = rows.sortBy(_._1)
-      sorted.map(_._1).zip(
-        sorted.scanLeft(0L) { case (acc, (_, _, t)) => acc + t })
-        .map { case (pid, off) => (pid, axis, off) }
-    }.toDF("__pid", "axis", "off")
-    val w = Window.partitionBy("__pid", "axis").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranks = hsnap.join(broadcast(offDf), Seq("__pid", "axis"))
-      .withColumn("__before", col("off") + sum(col("cnt")).over(w) - col("cnt"))
+    val ranks = RangeScan.prefix(hist, Seq("axis"), "v", Seq("cnt"), partitions).df
+      .withColumn("__before", col("__cum_cnt") - col("cnt"))
       .select(col("axis"), col("v"),
         (lit(2L) * col("__before") + col("cnt") + 1L).as("r2"))
     val rx = ranks.filter(col("axis") === 0).select(col("v").as("x"), col("r2").as("__rx"))
@@ -1213,9 +1168,10 @@ object Stats {
     *
     * Exactness: weights are DECIMAL throughout, the qualifying test
     * 2·cum ≥ total is an exact decimal comparison — no float boundary.
-    * Scale shape: ties collapse map-side (groupBy (group, value)), the
-    * cumulative window partitions BY GROUP over each group's distinct
-    * values — distributed across groups, never a single-partition window.
+    * Scale shape: ties collapse map-side (groupBy (group, value)), and
+    * [[RangeScan.prefix]] keyed by group supplies the cumulative weights —
+    * distributed across groups and within a dominant one, never a
+    * single-partition window.
     * Output: (group, n_values, total_weight, weighted_median).
     *
     * NULL groups are EXCLUDED (r15, the round-14 advice finding): the
@@ -1226,78 +1182,27 @@ object Stats {
     * need one should coalesce the group to a sentinel first). */
   def weightedMedian(df: DataFrame, group: String, value: Column,
       weight: Column, partitions: Int = 32): DataFrame = {
-    val spark = df.sparkSession
     // r14 rework (guide §2.5 — a dominant group is a one-task window):
     // the cumulative-weight window used to partition BY GROUP, so its
     // parallelism was #groups and every row of a hot group ran through one
     // task's DECIMAL accumulator (q195: 3 groups over 600k values = 3
-    // cores busy). The cumulative weights now come from the
-    // spearman/ksStatistic scaffold — range-partition the tie-collapsed
-    // (group, v) histogram, per-partition DECIMAL prefix sums, plus a
-    // ≤partitions·#groups-row offsets table collected once. Every __cum
-    // is the identical exact decimal (decimal addition is associative and
-    // the offsets replay the same v-order), so the qualifying filter and
-    // the output are bit-identical to the group-window form.
+    // cores busy). The cumulative weights now come from
+    // [[RangeScan.prefix]] keyed by group. Every __cum_w is the identical
+    // exact decimal (decimal addition is associative and the offsets
+    // replay the same v-order), so the qualifying filter and the output
+    // are bit-identical to the group-window form.
     val base = df
       .select(col(group), value.cast("double").as("v"),
         weight.cast("decimal(28,6)").as("w"))
       .filter(col(group).isNotNull &&
         col("v").isNotNull && col("w").isNotNull && col("w") > 0)
       .groupBy(col(group), col("v")).agg(sum(col("w")).as("w"))
-      .repartitionByRange(partitions, col(group), col("v"))
-      // r15: no sortWithinPartitions — range partitioning alone fixes the
-      // pid-to-value-order invariant the offsets rely on, and the scored
-      // pass's window re-sorts its partition regardless, so the pre-sort
-      // only made the snapshot materialization pay an extra pass
-      .withColumn("__pid", spark_partition_id())
-    val snap = Snapshot.eager(base)
-    // one bounded collect: per-(pid, group) weight totals and value counts
-    val partTotals = snap.groupBy("__pid", group)
-      .agg(sum(col("w")).as("t"), count(lit(1)).as("c"))
-      .collect()
-      .map(r => (r.getInt(0), r.get(1), r.getDecimal(2), r.getLong(3)))
-    // exclusive per-group prefix offsets in pid order (pid order IS value
-    // order under range partitioning), exact java BigDecimal arithmetic
-    val offRows = partTotals.groupBy(_._2).toSeq.flatMap { case (g, rows) =>
-      val sorted = rows.sortBy(_._1)
-      sorted.map(_._1).zip(
-        sorted.scanLeft(java.math.BigDecimal.ZERO) {
-          case (acc, (_, _, t, _)) => acc.add(t)
-        }).map { case (pid, off) => (pid, g, off) }
-    }
-    val groupMeta = partTotals.groupBy(_._2).map { case (g, rows) =>
-      (g, rows.map(_._3).foldLeft(java.math.BigDecimal.ZERO)(_.add(_)),
-        rows.map(_._4).sum)
-    }.toSeq
-    val gCol = snap.schema(group).dataType
-    val offDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offRows.map { case (pid, g, off) =>
-        org.apache.spark.sql.Row(pid, g, off) }, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__pid",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField(group, gCol),
-        org.apache.spark.sql.types.StructField("off",
-          org.apache.spark.sql.types.DataTypes.createDecimalType(38, 6)))))
-    val totDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(groupMeta.map { case (g, t, c) =>
-        org.apache.spark.sql.Row(g, t, c) }, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(group, gCol),
-        org.apache.spark.sql.types.StructField("__tot",
-          org.apache.spark.sql.types.DataTypes.createDecimalType(38, 6)),
-        org.apache.spark.sql.types.StructField("__nv",
-          org.apache.spark.sql.types.LongType))))
-    val wc = Window.partitionBy(col("__pid"), col(group)).orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    snap.join(broadcast(offDf), Seq("__pid", group))
-      .withColumn("__cum", col("off") + sum(col("w")).over(wc))
-      .join(broadcast(totDf), Seq(group))
-      .filter(col("__cum") * 2 >= col("__tot"))
+    RangeScan.prefix(base, Seq(group), "v", Seq("w"), partitions).df
+      .filter(col("__cum_w") * 2 >= col("__tot_w"))
       .groupBy(group)
       .agg(
-        max(col("__nv")).as("n_values"),
-        max(col("__tot")).cast("double").as("total_weight"),
+        max(col("__rows")).as("n_values"),
+        max(col("__tot_w")).cast("double").as("total_weight"),
         min(col("v")).as("weighted_median"))
       .orderBy(group)
   }

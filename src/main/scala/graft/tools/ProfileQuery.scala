@@ -7,15 +7,18 @@ import org.apache.spark.sql.SparkSession
   * jobs and comparing summed job wall time to end-to-end wall time — isolates
   * driver-side (Catalyst / scheduling / codegen) overhead from executor work.
   * Usage: runMain graft.tools.ProfileQuery <queryName> [repeats]
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.001), SPARK_GRAFT_CPUS (default 4,
+  * as in Verify) sets both the local core count and the shuffle partitions.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q60_immo_pipeline")
     val repeats = args.lift(1).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

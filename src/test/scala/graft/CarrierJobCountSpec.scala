@@ -1,0 +1,71 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+
+import graft.ops.{Drift, Stats}
+
+/** Spark job counts of the prefix-scan carriers: the carrier call (its
+  * snapshot and offsets collect run eagerly) plus one `collect()` of its
+  * result, on a fixed fixture. The counts pin the number of barriers each
+  * carrier pays, so a change to the shared scan that adds one fails here —
+  * and they are the baseline a scan that folds its range sampling into the
+  * snapshot has to beat. Jobs are attributed by job group, so jobs of other
+  * threads never count.
+  */
+class CarrierJobCountSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def jobsOf(body: => DataFrame): Int = {
+    val sc = spark.sparkContext
+    val group = s"carrier-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "carrier job count")
+    try {
+      body.collect()
+      TestListenerBus.drain(sc)
+      jobs.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private lazy val xs = (1 to 400).map(i => (i % 97).toDouble).toDF("v")
+  private lazy val ys = (1 to 300).map(i => (i % 53).toDouble + 0.5).toDF("v")
+  private lazy val pairs = (1 to 400).map(i => ((i % 37).toDouble, (i * 7 % 41).toDouble))
+    .toDF("x", "y")
+  private lazy val weighted = (1 to 400)
+    .map(i => (if (i % 5 == 0) "b" else "a", (i % 61).toDouble, (i % 7 + 1).toDouble))
+    .toDF("g", "v", "w")
+
+  // counts at the commit before the carriers shared RangeScan.prefix:
+  // ks 10, w1 10, spearman 14, weightedMedian 13 — the shared scan added
+  // no barrier, and weightedMedian's offsets and totals, once an RDD scan
+  // each, now ride one local relation
+  test("ksStatistic runs 10 Spark jobs") {
+    assert(jobsOf(Drift.ksStatistic(xs, ys, $"v", partitions = 4)) == 10)
+  }
+
+  test("wasserstein1d runs 10 Spark jobs") {
+    assert(jobsOf(Drift.wasserstein1d(xs, ys, $"v", partitions = 4)) == 10)
+  }
+
+  test("spearman runs 14 Spark jobs") {
+    assert(jobsOf(Stats.spearman(pairs, $"x", $"y", partitions = 4)) == 14)
+  }
+
+  test("weightedMedian runs 12 Spark jobs") {
+    assert(jobsOf(Stats.weightedMedian(weighted, "g", $"v", $"w", partitions = 4)) == 12)
+  }
+}

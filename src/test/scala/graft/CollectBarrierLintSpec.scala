@@ -20,8 +20,8 @@ class CollectBarrierLintSpec extends AnyFunSuite {
     "ops/DenseId.scala" -> 1,      // per-partition counts (≤#partitions)
     "ops/MissingData.scala" -> 1,  // per-column null fractions (≤#columns)
     "ops/Skyline.scala" -> 1,      // per-partition y-minima (≤#partitions)
-    "ops/Drift.scala" -> 6,        // per-partition prefix totals (≤#partitions each)
-    "ops/Stats.scala" -> 3,        // quantile cut points (≤#quantiles each); spearman + weightedMedian per-(pid,group) offset totals (≤partitions·#groups each)
+    "ops/Drift.scala" -> 1,        // jsdPairs' group list (≤#groups)
+    "ops/RangeScan.scala" -> 1,    // per-(pid, key) prefix totals (≤partitions·#keys)
     "ops/Ranked.scala" -> 1,       // per-partition count+sum (≤#partitions)
     "text/Curation.scala" -> 1,    // per-source sampling rates (≤#sources)
     "text/Retrieval.scala" -> 1,   // query-term df row (≤#query terms)

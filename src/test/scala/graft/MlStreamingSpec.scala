@@ -27,6 +27,20 @@ class MlStreamingSpec extends SparkSpec {
     assert(!feats.contains("y"))
   }
 
+  test("M1: a constant candidate column fails the gate instead of throwing") {
+    // corr of a zero-variance column divides by zero, which ANSI mode raises
+    // as DIVIDE_BY_ZERO; "pairOnly" is constant only on the rows where the
+    // target is non-null, the rows corr reads
+    val withConst = linearData.withColumn("const", lit(7.0))
+      .withColumn("pairOnly", when($"x1" === 0, 1.0).otherwise(2.0))
+      .withColumn("y", when($"x1" === 0, lit(null)).otherwise($"y"))
+    val base = linearData.withColumn("y", when($"x1" === 0, lit(null)).otherwise($"y"))
+    val feats = Models.selectFeaturesByCorrelation(withConst, "y", 0.10)
+    assert(feats == Models.selectFeaturesByCorrelation(base, "y", 0.10))
+    assert(feats.contains("x1") && !feats.contains("const") && !feats.contains("pairOnly"))
+    assert(Models.selectFeaturesByCorrelation(withConst.select("const", "y"), "y") == Nil)
+  }
+
   test("M2-M8: model selection picks a model with near-perfect fit on linear data") {
     // small folds/grid for test speed; the API defaults mirror the reference
     val (winner, all) = Models.selectBestModel(
