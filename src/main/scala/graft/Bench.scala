@@ -1,25 +1,101 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.jobs.JobSession
 
 /** Per-round benchmark: times every registered query at the given scale
   * factor and prints ONE JSON line. Config mirrors the 100 TB posture scaled
-  * to one machine: shuffle partitions = cores (not 200), AQE on (runtime
-  * coalesce + skew handling), broadcast threshold default.
+  * to one machine ([[JobSession.build]]: shuffle partitions = cores, not
+  * 200; AQE runtime coalesce + skew handling; broadcast threshold default).
+  * The dev tools reuse its timing loop rather than copying it.
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The timing action: the noop datasource sink. It CONSUMES EVERY OUTPUT
+    * COLUMN, which `count` does not — counting lets Catalyst drop an
+    * unreferenced left-join side entirely (q283's whole spans pipeline
+    * optimized to a bare scan+filter — the published number measured
+    * nothing) and prune expensive final projections (q284's splice HOF);
+    * the round-11 audit (BENCH_ACTION_AUDIT.json) measured 81/293 queries
+    * >1.5x higher under noop. [[BenchPins]] is a noop series from the
+    * round-12 re-baseline; BENCH_R12_COUNT_SIDECAR.json bridges the last
+    * count series.
+    */
+  def consume(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
+
+  /** r14 measurement-isolation fix (guide §1: isolate each query), run
+    * OUTSIDE the timed window: queries that return localCheckpoint-backed
+    * frames (the iterative/barrier operators) leave their blocks pinned in
+    * the BlockManager for the rest of the run — q60 measured 1.2 s isolated
+    * vs 4.1 s mid-run behind hundreds of leaked block MBs. Dropping
+    * persistent RDDs and SQL cache between queries removes cross-query
+    * interference; every query still computes from the parquet inputs
+    * (nothing an earlier query cached can be reused — this DELETES state,
+    * it never adds any). Blocking: async removal would overlap the NEXT
+    * query's timed window.
+    */
+  def isolate(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    spark.catalog.clearCache()
+  }
+
+  /** The registry's queries whose names start with one of `prefixes` (all
+    * of them when there are none). */
+  def select(prefixes: Seq[String]): Seq[(String, Query)] =
+    SparkEntry.queries.toSeq.filter { case (n, _) =>
+      prefixes.isEmpty || prefixes.exists(n.startsWith) }
+
+  /** One timed run of query `name` on `dir`'s tables, then [[isolate]].
+    * Returns (seconds, succeeded): the caller decides whether a failure
+    * counts, so a re-time can't double-count one. */
+  def time(spark: SparkSession, dir: String, name: String, fn: Query,
+      log: String => Unit = _ => ()): (Double, Boolean) = {
+    val t0 = System.nanoTime()
+    val ok = try { consume(fn(spark, dir)); true } catch { case e: Throwable =>
+      log(s"$name failed: ${e.getMessage}"); false }
+    val sec = (System.nanoTime() - t0) / 1e9
+    isolate(spark)
+    (sec, ok)
+  }
+
+  /** Warm-min: a first pass in name order, then (passes = 2) a re-time of
+    * every query that succeeded, keeping the min. Returns (name, seconds,
+    * first pass succeeded) in last-pass order.
+    *
+    * Repeat-run spread is JIT/GC noise, not plan changes (measured 85-130 s
+    * totals on identical code; round-4 showed 1.3-5x drift on UNCHANGED
+    * cheap queries too): the warm number is the plan's cost, the cold one
+    * is the JVM's mood. A failed retry never replaces a first-pass time.
+    *
+    * The second pass runs in REVERSE order: round 8 showed 10 queries in
+    * one contiguous alphabetical stretch (q177-q195) measuring 5-6x their
+    * pins while isolated re-runs measured 1.4-1.8x — when both passes
+    * traverse the same order, mid-run JVM/GC pressure correlates across
+    * passes and min() can't cancel a positional slowdown. Reversing the
+    * retime order puts each query's two samples at different run
+    * positions, so min() keeps whichever regime was healthy.
+    */
+  def warmMin(spark: SparkSession, dir: String, selected: Seq[(String, Query)],
+      passes: Int = 2, log: String => Unit = _ => ()): Seq[(String, Double, Boolean)] = {
+    val first = selected.sortBy(_._1).map { case (name, fn) =>
+      log(s"running $name")
+      (name, fn, time(spark, dir, name, fn, log))
+    }
+    if (passes <= 1) first.map { case (name, _, (t, ok)) => (name, t, ok) }
+    else first.reverse.map {
+      case (name, fn, (t1, true)) =>
+        val (t2, ok2) = time(spark, dir, name, fn, log)
+        (name, if (ok2) math.min(t1, t2) else t1, true)
+      case (name, _, (t1, false)) => (name, t1, false)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = JobSession.build("graft-bench")
     // ERROR, not WARN: the driver parses the tail of this process's output,
     // and benign WARNs after the JSON line (bounded global windows, MLlib's
     // regParam notice, executor shutdown chatter) could push the line out of
@@ -33,71 +109,9 @@ object Bench {
 
     // optional args: query-name prefixes to run (dev iteration); driver passes none
     val wanted = args.toSeq
-    val selected =
-      if (wanted.isEmpty) SparkEntry.queries.toSeq
-      else SparkEntry.queries.toSeq.filter { case (n, _) => wanted.exists(n.startsWith) }
-    var errors = 0
-    // Timing action. `noop` (the noop datasource sink) is the default
-    // since round 12: it CONSUMES EVERY OUTPUT COLUMN, which `count` does
-    // not — counting lets Catalyst drop an unreferenced left-join side
-    // entirely (q283's whole spans pipeline optimized to a bare
-    // scan+filter — the published number measured nothing) and prune
-    // expensive final projections (q284's splice HOF); the round-11 audit
-    // (BENCH_ACTION_AUDIT.json) measured 81/293 queries >1.5x higher
-    // under noop. The pins in [[BenchPins]] are a NOOP series from the
-    // round-12 re-baseline; `count` remains available for cross-series
-    // comparisons against pre-round-12 artifacts. The artifact records
-    // which action produced it (the "action" field below).
-    val action = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "noop")
-    def consume(df: org.apache.spark.sql.DataFrame): Unit =
-      if (action == "noop") df.write.mode("overwrite").format("noop").save()
-      else df.count()
-    // returns (seconds, succeeded); the caller decides whether a failure
-    // counts toward `errors` so the re-time pass can't double-count one
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok = try { consume(fn(spark, sfDir)); true } catch { case _: Throwable => false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // r14 measurement-isolation fix (guide §1: isolate each query), OUTSIDE
-      // the timed window: queries that return localCheckpoint-backed frames
-      // (the iterative/barrier operators) leave their blocks pinned in the
-      // BlockManager for the rest of the run — q60 measured 1.2 s isolated
-      // vs 4.1 s mid-run behind hundreds of leaked block MBs. Dropping
-      // persistent RDDs and SQL cache between queries removes cross-query
-      // interference; every query still computes from the parquet inputs
-      // (nothing an earlier query cached can be reused — this DELETES state,
-      // it never adds any).
-      // blocking: async removal would overlap the NEXT query's timed window
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
-      (sec, ok)
-    }
-    val firstPass = selected.sortBy(_._1).map { case (name, fn) =>
-      val (t, ok) = time(fn)
-      if (!ok) errors += 1
-      (name, fn, t, ok)
-    }
-    // repeat-run spread is JIT/GC noise, not plan changes (measured 85-130 s
-    // totals on identical code; round-4 showed 1.3-5x drift on UNCHANGED
-    // cheap queries too). Re-time EVERY successful query once and keep the
-    // min — the warm number is the plan's cost, the cold one is the JVM's
-    // mood. The second pass of the cheap majority costs seconds; the heavy
-    // tail was already being re-timed. Failed queries are never re-timed.
-    //
-    // The second pass runs in REVERSE order: round 8 showed 10 queries in
-    // one contiguous alphabetical stretch (q177-q195) measuring 5-6x their
-    // pins while isolated re-runs measured 1.4-1.8x — when both passes
-    // traverse the same order, mid-run JVM/GC pressure correlates across
-    // passes and min() can't cancel a positional slowdown. Reversing the
-    // retime order puts each query's two samples at different run
-    // positions, so min() keeps whichever regime was healthy.
-    val warm = firstPass.reverse.map { case (name, fn, t1, ok) =>
-      name -> (if (ok) {
-        // a failed retry must not replace a successful first-pass time
-        val (t2, ok2) = time(fn)
-        if (ok2) math.min(t1, t2) else t1
-      } else t1)
-    }
+    val selected = select(wanted)
+    val warm = warmMin(spark, sfDir, selected)
+    val errors = warm.count(!_._3)
     // Over-pin adjudication, learned from rounds 8-9: three consecutive
     // full runs produced three DISJOINT >1.5x offender sets (r8: the
     // q177-q195 band; r9 run 1: q04/q07/q84/...; r9 isolated: different
@@ -122,11 +136,11 @@ object Bench {
     // geomean, max, offenders, sidecar) derives from `results`, the
     // post-adjudication warm-min series — one story, told once.
     val fnByName = selected.toMap
-    val results = warm.map { case (k, v) =>
+    val results = warm.map { case (k, v, _) =>
       val overPin = Pinned.get(k).exists(pin =>
         v > 0 && v / pin > 1.5 && v - pin > 0.25)
       k -> (if (overPin) {
-        val retimes = (1 to 2).map(_ => time(fnByName(k))).collect {
+        val retimes = (1 to 2).map(_ => time(spark, sfDir, k, fnByName(k))).collect {
           case (t, true) => t
         }
         (retimes :+ v).min
@@ -168,17 +182,17 @@ object Bench {
         .sortBy(-_._2).take(10)
         .map { case (k, r) => "\"" + k + "\":" + r3(r) }.mkString("{", ",", "}")
       try {
-        // the sidecar records its timing action too (a noop series and a
-        // count series must never be compared ratio-for-ratio)
+        // the sidecar records its timing action too (a noop series and the
+        // pre-round-12 count series must never be compared ratio-for-ratio)
         val detail = ratios.sortBy(_._1)
           .map { case (k, r) => "  \"" + k + "\":" + r3(r) }
-          .mkString("{\n  \"__action\":\"" + action + "\",\n", ",\n", "\n}")
+          .mkString("{\n  \"__action\":\"noop\",\n", ",\n", "\n}")
         java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_PINS_REPORT.json"),
           detail.getBytes("UTF-8"))
       } catch { case _: Throwable => () } // sidecar is best-effort
       s""","vs_pinned_geomean":${r3(geo)},"vs_pinned_max":{$worst},"over_pinned_1_5x":$over"""
     } else ""
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"errors":$errors,"action":"$action"$pinFields,"queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"errors":$errors,"action":"noop"$pinFields,"queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
   }
 

@@ -19,17 +19,21 @@ import graft.ml.Models
   * snapshots, writes are overwrite-by-path or dedup-then-union.
   */
 object JobSession {
-  def build(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** The one session factory (mains, Bench, Verify, dev tools, the test
+    * session): master `SPARK_MASTER` else `local[cpus]`, shuffle partitions
+    * = `cpus` (`SPARK_GRAFT_CPUS`, else every core), UTC, ns parquet
+    * timestamps as longs. AQE is a Spark default; the UI is off by launcher
+    * option (build.sbt's javaOptions, spark-submit). */
+  def build(appName: String,
+      cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession =
     SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
-  }
 
   /** A main's whole life: build the session, run `body`, and stop the
     * session whether `body` succeeds or fails.

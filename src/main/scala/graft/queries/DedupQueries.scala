@@ -622,7 +622,7 @@ object DedupQueries extends QueryGroup {
         "meta/_SUCCESS") { tmpDir =>
         val train = docs.filter(col("doc_id") % 10 =!= 0)
         ExactSubstrIndex.build(train, col("text"), tmpDir, sub = 24,
-          buckets = ExactSubstrIndex.adaptiveBuckets(train))
+          buckets = ExactSubstrIndex.adaptiveBuckets(train, 24))
       }
       ExactSubstrIndex.probeSpans(s, idxDir,
         docs.filter(col("doc_id") % 10 === 0), "doc_id", col("text"))
@@ -653,7 +653,7 @@ object DedupQueries extends QueryGroup {
       val m10 = col("doc_id") % 10
       val train = docs.filter(m10 >= 1 && m10 <= 5)
       ExactSubstrIndex.build(train, col("text"), tmp, sub = 24,
-        buckets = ExactSubstrIndex.adaptiveBuckets(train))
+        buckets = ExactSubstrIndex.adaptiveBuckets(train, 24))
       ExactSubstrIndex.add(s, tmp, docs.filter(m10 >= 6), col("text"))
       val out = ExactSubstrIndex.probeSpans(s, tmp,
         docs.filter(m10 === 0), "doc_id", col("text"))
@@ -730,7 +730,7 @@ object DedupQueries extends QueryGroup {
         "meta/_SUCCESS") { tmpDir =>
         val train = docs.filter(col("doc_id") % 10 =!= 0)
         ExactSubstrIndex.build(train, col("text"), tmpDir, sub = 24,
-          buckets = ExactSubstrIndex.adaptiveBuckets(train))
+          buckets = ExactSubstrIndex.adaptiveBuckets(train, 24))
       }
       ExactSubstrIndex.contamMatches(docs.filter(col("doc_id") % 10 === 0),
         ExactSubstrIndex.loadGrams(s, idxDir), "doc_id", col("text"),

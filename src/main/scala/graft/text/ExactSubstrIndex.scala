@@ -85,22 +85,28 @@ object ExactSubstrIndex {
       .withColumn("bucket", pmod(col("h"), lit(buckets)).cast("int"))
   }
 
+  /** Estimated gram-parquet bytes of a `sub`-char index over `train`: the
+    * train input's file-based size (exact, unlike the gram relation's
+    * explode-inflated optimizer estimate) times the amplification measured
+    * at sub=24, ~40x, scaled by sub/24 (each char sits in ~sub grams).
+    */
+  private def gramBytes(train: DataFrame, sub: Int): Long = {
+    val inputEst = train.queryExecution.optimizedPlan.stats.sizeInBytes
+    (inputEst * 40 * sub / 24).min(BigInt(Long.MaxValue)).toLong
+  }
+
   /** Scale-adaptive bucket count for [[build]]: enough bucket dirs that a
     * corpus-scale build writes in parallel, few enough that a small corpus
     * does not shatter into tiny files (r15, guide §6: the measured sf0.1
     * index was 22 MB in 131 files at the old fixed buckets=64, and the
     * build+add file/commit overhead — not bytes — dominated q289; 8
-    * buckets halved build+add). The estimate anchors on the TRAIN INPUT's
-    * file-based size — exact, unlike the gram relation's explode-inflated
-    * optimizer estimate — times the measured gram-parquet amplification
-    * (~40x the compressed input text at sub=24). Layout only: bucket count
-    * never changes any probe result, and `meta` records whatever was used.
+    * buckets halved build+add): one bucket per ~4 MB of [[gramBytes]],
+    * clamped to [8, maxBuckets]. Layout only: bucket count never changes
+    * any probe result, and `meta` records whatever was used.
     */
-  def adaptiveBuckets(train: DataFrame, maxBuckets: Int = 64): Int = {
-    val inputEst = train.queryExecution.optimizedPlan.stats.sizeInBytes
-    val gramEst = (inputEst * 40).min(BigInt(Long.MaxValue)).toLong
-    math.max(8L, math.min(maxBuckets.toLong, gramEst / (4L << 20))).toInt
-  }
+  def adaptiveBuckets(train: DataFrame, sub: Int, maxBuckets: Int = 64): Int =
+    math.max(8L, math.min(maxBuckets.toLong,
+      gramBytes(train, sub) / (4L << 20))).toInt
 
   /** Build and persist the index: `dir/meta` records (sub, buckets),
     * `dir/grams` holds the distinct gram relation partitioned by hash
@@ -122,14 +128,9 @@ object ExactSubstrIndex {
     import spark.implicits._
     spark.sparkContext.setJobDescription(s"xsub: build grams -> $dir")
     try {
-      // file sizing from the input-anchored estimate (the relation's own
-      // optimizer estimate is explode-inflated and overflowed the old
-      // (est / 96MB / buckets).toLong math — the r14 advice finding);
-      // clamped to [1, 4096] files per bucket
-      val inputEst = train.queryExecution.optimizedPlan.stats.sizeInBytes
-      val gramEst = (inputEst * 40).min(BigInt(Long.MaxValue)).toLong
+      // ~128 MB files, clamped to [1, 4096] per bucket
       val filesPerBucket = math.max(1L, math.min(4096L,
-        gramEst / (128L << 20) / buckets)).toInt
+        gramBytes(train, sub) / (128L << 20) / buckets)).toInt
       // __sf spreads WITHIN a bucket: (h / buckets) mod files is
       // independent of h mod buckets for a uniform hash, unlike the r14
       // pmod(h, files) slot, which collapses to the bucket value whenever

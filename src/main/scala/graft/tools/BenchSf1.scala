@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
-
-import org.apache.spark.sql.SparkSession
+import graft.Bench
+import graft.jobs.JobSession
 
 /** sf≈1 scale-slope sweep (dev tool): the sf0.1 bench can't see a
   * superlinear cliff that only opens at 10× the data (round 9's q134 read
@@ -29,8 +28,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Args = query-name prefixes to run (default: the ENTIRE registry —
   * VERDICT r9 item 1: 260 of 275 queries had never executed at sf1).
-  * Timing is the Bench warm-min method: two passes, the retime pass in
-  * reverse order, min kept. Output: one JSON line plus a BENCH_SF1.json
+  * Timing is [[graft.Bench.warmMin]] itself, not a copy: noop action, two
+  * passes (the retime pass in reverse order, min kept;
+  * SPARK_GRAFT_SF1_PASSES=1 keeps the first pass only) and Bench's
+  * between-query isolation (persistent RDDs and SQL cache dropped outside
+  * each timed window). Output: one JSON line plus a BENCH_SF1.json
   * sidecar carrying the full per-query slope table and the
   * `flagged_over_12x` list (slope > 12 on a 10-replica corpus = real
   * superlinearity, not partition-count noise).
@@ -40,66 +42,29 @@ object BenchSf1 {
   def main(args: Array[String]): Unit = {
     val dataDir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "target/sf1")
     val replicas = sys.env.getOrElse("SPARK_GRAFT_SF1_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     require(new java.io.File(s"$dataDir/lineitem.parquet").exists(),
       s"no sf1 corpus at $dataDir — synthesize it first: " +
         s"python3 tools/make_sf1.py /root/testdata/sf0.1 $dataDir $replicas")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SF1_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // second-decade (sf10) runs push single stages past the default
-      // heartbeat budget under GC pressure; in local mode the executor
-      // then kills the shared JVM ("unable to send heartbeats to driver
-      // more than 60 times"). Generous in-process timeouts change no
-      // measured work.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "1200s")
-      .getOrCreate()
+    // second-decade (sf10) runs push single stages past the default
+    // heartbeat budget under GC pressure; in local mode the executor
+    // then kills the shared JVM ("unable to send heartbeats to driver
+    // more than 60 times"). Generous in-process timeouts change no
+    // measured work.
+    sys.props("spark.executor.heartbeatInterval") = "60s"
+    sys.props("spark.network.timeout") = "1200s"
+    val spark = JobSession.build("graft-bench-sf1")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
     val wanted = args.toSeq
-    val selected =
-      (if (wanted.isEmpty) SparkEntry.queries.toSeq
-       else SparkEntry.queries.toSeq.filter { case (n, _) =>
-         wanted.exists(n.startsWith)
-       }).sortBy(_._1)
-    // same full-consumption default action as graft.Bench (see there):
-    // `noop` defeats count()'s join-elimination/column-pruning blind spot;
-    // round-12 flipped the default so scale slopes measure the same plans
-    // the sf0.1 noop pins do
-    val action = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "noop")
-    def consume(df: org.apache.spark.sql.DataFrame): Unit =
-      if (action == "noop") df.write.mode("overwrite").format("noop").save()
-      else df.count()
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        name: String): Double = {
-      val t0 = System.nanoTime()
-      try { consume(fn(spark, dataDir)); (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[sf1] $name failed: ${e.getMessage}"); -1.0 }
-    }
     // PASSES=1 skips the reverse re-time (single-pass timing for long
     // sweeps where 2x wall-clock buys little — the artifact's method
-    // string records which was used)
+    // string records which was used); a failed query reads -1
     val passes = sys.env.getOrElse("SPARK_GRAFT_SF1_PASSES", "2").toInt
-    val firstPass = selected.map { case (name, fn) =>
-      System.err.println(s"[sf1] running $name")
-      (name, fn, time(fn, name))
-    }
-    val results = (if (passes <= 1) firstPass.map(r => r._1 -> r._3)
-      else firstPass.reverse.map { case (name, fn, t1) =>
-        name -> (if (t1 < 0) t1 else {
-          val t2 = time(fn, name)
-          if (t2 < 0) t1 else math.min(t1, t2)
-        })
-      }).sortBy(_._1)
+    val results = Bench.warmMin(spark, dataDir, Bench.select(wanted), passes,
+        m => System.err.println(s"[sf1] $m"))
+      .map { case (name, t, ok) => name -> (if (ok) t else -1.0) }
+      .sortBy(_._1)
 
     def r3(v: Double): String = f"$v%.3f"
     val pins = graft.BenchPins.values
@@ -139,7 +104,7 @@ object BenchSf1 {
     val sidecar =
       s"""{
  "what": "${if (wanted.isEmpty) "full-registry" else wanted.mkString("[", " ", "]-prefixed")} scale-slope sweep at ${replicas}x the sf0.1 data, synthesized by tools/make_sf1.py (per-key-SPACE id offsets keep FKs intact within each replica; documents.text replica-salted, embeddings nudged, so dedup/ANN keep their duplicate RATE).",
- "method": "${if (passes <= 1) "single pass" else "warm-min of 2 passes, retime pass in reverse order"}, action=$action, local[$cpus]; raw_ratio = t / pin_sf0.1 over ${f"$decades%.0f"} decade(s) (linear scaling = $replicas.0), slope = raw_ratio^(1/decades) geometric per decade; flagged = raw_ratio > ${f"$flagLine%.0f"} i.e. per-decade slope > 12",
+ "method": "${if (passes <= 1) "single pass" else "warm-min of 2 passes, retime pass in reverse order"}, action=noop, ${spark.sparkContext.master}; raw_ratio = t / pin_sf0.1 over ${f"$decades%.0f"} decade(s) (linear scaling = $replicas.0), slope = raw_ratio^(1/decades) geometric per decade; flagged = raw_ratio > ${f"$flagLine%.0f"} i.e. per-decade slope > 12",
  "n_queries": ${results.size},
  "errors": ${results.count(_._2 < 0)},
  "failed": [${results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }.mkString(",")}],

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.jobs.JobSession
 
 /** Dev-only plan dumper for the optimization rounds: writes
   * `.explain("formatted")` output for each named query to
@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.tools.ExplainDump <outDir> <tag> <queryName>...
   * Env: SPARK_GRAFT_SF_DIR (default sf0.01 — plan shape, not timing, so the
   * small SF is fine and fast; AQE-dependent shapes are noted per-query in the
-  * round doc where they differ).
+  * round doc where they differ); SPARK_GRAFT_CPUS sets the shuffle
+  * partitions the plans show (see [[JobSession.build]]).
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -22,14 +23,7 @@ object ExplainDump {
     val names = args.drop(2).toSeq
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = JobSession.build("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val fn = graft.SparkEntry.queries.getOrElse(n,

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Bench.{consume, isolate}
+import graft.jobs.JobSession
 
 /** Dev-only phase-level timing probe for the optimization rounds: times the
   * internal phases of composite operators (index build/add/probe, multi-pass
@@ -11,7 +13,8 @@ import org.apache.spark.sql.functions._
   * operator level, without the UI.
   *
   * Usage: runMain graft.tools.OptProbe <probe> [reps]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (see
+  * [[JobSession.build]]).
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
@@ -19,16 +22,7 @@ object OptProbe {
     val probe = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = JobSession.build("graft-opt-probe")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000L).selectExpr("sum(id)").collect()
     graft.Tables.lineitem(spark, sfDir).limit(10).collect()
@@ -41,8 +35,6 @@ object OptProbe {
       spark.sparkContext.setJobDescription(null)
       r
     }
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
 
     (1 to reps).foreach { rep =>
       println(s"--- rep $rep ---")
@@ -54,18 +46,18 @@ object OptProbe {
           t("build(A 50%)") {
             val train = docs.filter(m10 >= 1 && m10 <= 5)
             graft.text.ExactSubstrIndex.build(train, col("text"), tmp, 24,
-              graft.text.ExactSubstrIndex.adaptiveBuckets(train))
+              graft.text.ExactSubstrIndex.adaptiveBuckets(train, 24))
           }
           t("add(B 40%)") {
             graft.text.ExactSubstrIndex.add(
               spark, tmp, docs.filter(m10 >= 6), col("text"))
           }
           t("probe(10%)") {
-            noop(graft.text.ExactSubstrIndex.probeSpans(
+            consume(graft.text.ExactSubstrIndex.probeSpans(
               spark, tmp, docs.filter(m10 === 0), "doc_id", col("text")))
           }
           t("gramRelation(A) noop") {
-            noop(graft.text.ExactSubstrIndex.gramRelation(
+            consume(graft.text.ExactSubstrIndex.gramRelation(
               docs.filter(m10 >= 1 && m10 <= 5), col("text"), 24, 64))
           }
           val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -88,7 +80,7 @@ object OptProbe {
                 spark, tmp, docs.filter(m10 >= 6), col("text"))
             }
             t(s"probe b=$b") {
-              noop(graft.text.ExactSubstrIndex.probeSpans(
+              consume(graft.text.ExactSubstrIndex.probeSpans(
                 spark, tmp, docs.filter(m10 === 0), "doc_id", col("text")))
             }
             val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -120,23 +112,23 @@ object OptProbe {
           }
           fresh.unpersist(blocking = true)
           t("add: anti noop (no persist)") {
-            noop(graft.text.ExactSubstrIndex.gramRelation(
+            consume(graft.text.ExactSubstrIndex.gramRelation(
                 docs.filter(m10 >= 6), col("text"), meta.sub, meta.buckets)
               .join(existing.select("h", "g"), Seq("h", "g"), "left_anti")
               .select("h", "g", "bucket"))
           }
           t("add: anti noop SHJ hint") {
-            noop(graft.text.ExactSubstrIndex.gramRelation(
+            consume(graft.text.ExactSubstrIndex.gramRelation(
                 docs.filter(m10 >= 6), col("text"), meta.sub, meta.buckets)
               .join(existing.select("h", "g").hint("SHUFFLE_HASH"),
                 Seq("h", "g"), "left_anti")
               .select("h", "g", "bucket"))
           }
           t("add: fresh-grams noop") {
-            noop(graft.text.ExactSubstrIndex.gramRelation(
+            consume(graft.text.ExactSubstrIndex.gramRelation(
               docs.filter(m10 >= 6), col("text"), meta.sub, meta.buckets))
           }
-          t("add: existing scan noop") { noop(existing.select("h", "g")) }
+          t("add: existing scan noop") { consume(existing.select("h", "g")) }
           val fs = org.apache.hadoop.fs.FileSystem.get(
             java.net.URI.create(tmp), spark.sparkContext.hadoopConfiguration)
           fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
@@ -173,19 +165,18 @@ object OptProbe {
             .filter(lit(1) + least(col("__sza") - col("__pa"),
               col("__szb") - col("__pb")) >= alpha)
             .select("a", "b").distinct()
-          t("base noop") { noop(base) }
-          t("tok noop") { noop(tok) }
-          t("dfs noop") { noop(dfs) }
-          t("prefix noop") { noop(prefix) }
-          t("cand noop") { noop(cand) }
-          t("full q246 noop") { noop(graft.text.DedupOps
+          t("base noop") { consume(base) }
+          t("tok noop") { consume(tok) }
+          t("dfs noop") { consume(dfs) }
+          t("prefix noop") { consume(prefix) }
+          t("cand noop") { consume(cand) }
+          t("full q246 noop") { consume(graft.text.DedupOps
             .prefixFilterJaccardPairs(docs, "doc_id", textCol)) }
           println("  counts: base=" + base.count() + " tok=" + tok.count() +
             " prefix=" + prefix.count() + " cand=" + cand.count())
         case other => sys.error(s"unknown probe $other")
       }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
+      isolate(spark)
     }
     spark.stop()
   }

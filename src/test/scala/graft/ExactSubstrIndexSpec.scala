@@ -159,4 +159,18 @@ class ExactSubstrIndexSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/meta")
     assert(ExactSubstrIndex.loadMeta(spark, dir).sub == 24)
   }
+
+  test("adaptiveBuckets: sub=24 keeps the x40 sizing, a longer window never " +
+      "gets fewer buckets") {
+    // Range stats are exact: 8 bytes x 250k rows = 2 MB of input, x40 at
+    // sub=24 = 80 MB of grams = 19 buckets of ~4 MB (inside the [8, 64]
+    // clamp, so the sub scaling is visible); sub=48 doubles the grams
+    val train = spark.range(250000L).toDF()
+    assert(train.queryExecution.optimizedPlan.stats.sizeInBytes == 2000000)
+    val at24 = ExactSubstrIndex.adaptiveBuckets(train, 24)
+    assert(at24 == 19)
+    val at48 = ExactSubstrIndex.adaptiveBuckets(train, 48)
+    assert(at48 >= at24)
+    assert(at48 == 38)
+  }
 }

@@ -1,7 +1,8 @@
 package graft
 import org.apache.spark.sql.functions._
 /** One-off scale measurement (dev main, not a test): 1M synthetic docs with
-  * planted dup structure, timing the dedup ladder end-to-end at local[32].
+  * planted dup structure, timing the dedup ladder end-to-end on every core
+  * (SPARK_GRAFT_CPUS overrides; see [[graft.jobs.JobSession.build]]).
   *
   * TIMING ACTION: noop-datasource save on the final frame — FULL column
   * consumption, the round-12 bench action. The pre-round-14 series used
@@ -15,10 +16,7 @@ import org.apache.spark.sql.functions._
   * recovery figure is wanted. */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.jobs.JobSession.build("graft-scale-smoke")
     spark.sparkContext.setLogLevel("ERROR")
     val n = 1000000L
     // ~25% exact dups (template collapse), long shared template spans

@@ -12,14 +12,8 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a fixed 4, not the host's cores: some assertions depend on it
+    val s = graft.jobs.JobSession.build("graft-test", cpus = 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
