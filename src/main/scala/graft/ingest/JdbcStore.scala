@@ -56,7 +56,7 @@ object JdbcStore {
 
   /** Append rows to a JDBC table (created on first write). The reference's
     * INSERT OR IGNORE semantics live one level up (ScrapeJob.appendDedup
-    * dedups against the existing keys before appending).
+    * anti-joins against the existing keys before appending).
     */
   def writeTable(df: DataFrame, url: String, table: String,
       driver: Option[String] = None): Unit = {

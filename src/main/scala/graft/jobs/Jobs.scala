@@ -1,6 +1,7 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Preprocessing, Tables}
@@ -8,6 +9,7 @@ import graft.enrich.Geocode
 import graft.ingest.{LinkState, ScrapeParse, Sitemap}
 import graft.io.ExportCsv
 import graft.ml.Models
+import graft.ops.Snapshot
 
 /** The four DAG tasks of the reference's Airflow pipeline
   * (/root/reference/docker-airflow/dags/airflow_auto_model.py:23-47), each as
@@ -16,7 +18,7 @@ import graft.ml.Models
   * airflow/immo_pipeline_dag.py in this repo).
   *
   * Every job is idempotent (safe under Airflow catchup replays): reads are
-  * snapshots, writes are overwrite-by-path or dedup-then-union.
+  * snapshots, writes are overwrite-by-path or a deduplicated staged append.
   */
 object JobSession {
   /** The one session factory (mains, Bench, Verify, dev tools, the test
@@ -71,8 +73,11 @@ object ScrapeJob {
     val links0 =
       if (pathExists(spark, linksDir)) spark.read.parquet(linksDir)
       else LinkState.emptyLinks(spark)
-    val snapshot = Sitemap.listingUrls(spark, indexXml, fetcher)
-    val links1 = LinkState.applySnapshot(links0, snapshot, now)
+    // Both sinks read the link diff (pending URLs, then the status
+    // update): snapshot the sitemap URL set and the diff so each
+    // sub-sitemap is fetched, and the diff computed, once per run.
+    val snapshot = Snapshot.eager(Sitemap.listingUrls(spark, indexXml, fetcher))
+    val links1 = Snapshot.eager(LinkState.applySnapshot(links0, snapshot, now))
 
     val pending = LinkState.pending(links1)
       .repartition(20) // the reference's max_workers=20 (scraper.py:327)
@@ -90,7 +95,11 @@ object ScrapeJob {
       val links2 = LinkState.applyScrapeResults(
         links1, parsed.select("url", "ok"), now)
       overwriteAtomic(spark, links2, linksDir)
-    } finally parsed.unpersist(blocking = false)
+    } finally {
+      parsed.unpersist(blocking = false)
+      Snapshot.release(links1)
+      Snapshot.release(snapshot)
+    }
   }
 
   /** Side-effecting I/O belongs in mapPartitions, not a per-row UDF
@@ -118,24 +127,85 @@ object ScrapeJob {
     }.toDF("url", "html")
   }
 
-  private def hadoopFs(spark: SparkSession, p: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def hadoopFs(spark: SparkSession, p: String): FileSystem =
+    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Hadoop FileSystem, not java.io.File — works on HDFS/S3A/local alike. */
   private[graft] def pathExists(spark: SparkSession, p: String): Boolean =
-    hadoopFs(spark, p).exists(new org.apache.hadoop.fs.Path(p))
+    hadoopFs(spark, p).exists(new Path(p))
 
-  /** INSERT OR IGNORE ≡ dedup on key then union (SURVEY §2.1 S12). */
+  /** INSERT OR IGNORE (SURVEY §2.1 S12): append the batch's rows whose
+    * `key` the store lacks, and leave every stored file untouched, so a
+    * week costs the week, not the store. Only the stored key column is
+    * read (the anti-join's build side).
+    *
+    * Staged append — the rows are committed in three steps:
+    *
+    *   1. write them complete to `dir__append` in overwrite mode (complete
+    *      iff its `_SUCCESS` marker exists);
+    *   2. rename each data file into `dir` (or, when no store exists yet,
+    *      the whole staging dir to `dir`: the first commit is one rename);
+    *   3. delete `dir__append`.
+    *
+    * A crash in any step, then a replay of the same batch, converges on the
+    * uncrashed table: files already renamed into `dir` are seen by the
+    * replay's anti-join, and the rest are rewritten in staging. Staging
+    * outside `dir` matters: an append job writing straight into `dir`
+    * stages under `dir/_temporary`, whose committed task output a later
+    * append's job commit can merge, duplicating keys. A replay that finds
+    * no new rows changes no data file.
+    *
+    * The batch must carry the store's column names and types (nullability
+    * aside): one parquet dir holds one schema, since readers take it from
+    * one file's footer. A mismatch throws before any file is written.
+    */
   private[graft] def appendDedup(spark: SparkSession, rows: DataFrame,
       dir: String, key: String): Unit = {
-    recoverAtomic(spark, dir) // crashed swap ⇒ restore before the exists check
-    val merged =
-      if (pathExists(spark, dir)) {
+    // a store written by the former overwrite may be mid-swap: restore it
+    // before the exists check
+    recoverAtomic(spark, dir)
+    val fs = hadoopFs(spark, dir)
+    val target = new Path(dir)
+    val stage = new Path(dir + "__append")
+    val stored = fs.exists(target)
+    val fresh =
+      if (stored) {
         val existing = spark.read.parquet(dir)
-        rows.join(existing, Seq(key), "left_anti").unionByName(existing)
+        requireSameSchema(rows, existing, dir)
+        rows.join(existing.select(key), Seq(key), "left_anti")
+          .select(existing.columns.map(col): _*)
       } else rows
-    overwriteAtomic(spark, merged, dir)
+    val written = Observation()
+    // rebalance, not coalesce: coalesce would pull the fetch stage upstream
+    // into one task; AQE sizes the rebalanced output, one file for a week
+    fresh.hint("rebalance").observe(written, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(stage.toString)
+    val newRows = written.get("rows").asInstanceOf[Long]
+    if (!stored) rename(fs, stage, target)
+    else {
+      if (newRows > 0) fs.listStatus(stage).map(_.getPath)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .foreach(p => rename(fs, p, new Path(target, p.getName)))
+      fs.delete(stage, true)
+    }
+  }
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"rename $from -> $to failed")
+
+  /** Throw, naming every difference, unless `batch` has `store`'s column
+    * names and types (nullability aside). */
+  private def requireSameSchema(batch: DataFrame, store: DataFrame, dir: String): Unit = {
+    def types(df: DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
+    val (b, s) = (types(batch), types(store))
+    val diffs = (b.keySet -- s.keySet).toSeq.sorted.map(c => s"$c only in the batch") ++
+      (s.keySet -- b.keySet).toSeq.sorted.map(c => s"$c only in the store") ++
+      (b.keySet & s.keySet).toSeq.sorted.filter(c => b(c) != s(c))
+        .map(c => s"$c is ${b(c)} in the batch, ${s(c)} in the store")
+    if (diffs.nonEmpty)
+      throw new IllegalArgumentException(
+        s"batch schema differs from the store at $dir: ${diffs.mkString("; ")}")
   }
 
   /** Overwrite via temp-dir swap (parquet overwrite of a dir being read),
@@ -158,15 +228,13 @@ object ScrapeJob {
     */
   private[graft] def overwriteAtomic(spark: SparkSession, df: DataFrame, dir: String): Unit = {
     val fs = hadoopFs(spark, dir)
-    val target = new org.apache.hadoop.fs.Path(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__tmp")
-    val old = new org.apache.hadoop.fs.Path(dir + "__old")
+    val target = new Path(dir)
+    val tmp = new Path(dir + "__tmp")
+    val old = new Path(dir + "__old")
     df.write.mode("overwrite").parquet(tmp.toString)
     if (fs.exists(old)) fs.delete(old, true) // stale set-aside from a crash after step 3
-    if (fs.exists(target) && !fs.rename(target, old))
-      throw new java.io.IOException(s"rename $dir -> $old failed")
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"rename $tmp -> $dir failed")
+    if (fs.exists(target)) rename(fs, target, old)
+    rename(fs, tmp, target)
     fs.delete(old, true)
   }
 
@@ -176,18 +244,16 @@ object ScrapeJob {
     */
   private[graft] def recoverAtomic(spark: SparkSession, dir: String): Unit = {
     val fs = hadoopFs(spark, dir)
-    val target = new org.apache.hadoop.fs.Path(dir)
+    val target = new Path(dir)
     if (fs.exists(target)) return
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__tmp")
-    val old = new org.apache.hadoop.fs.Path(dir + "__old")
-    val tmpComplete = fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
+    val tmp = new Path(dir + "__tmp")
+    val old = new Path(dir + "__old")
+    val tmpComplete = fs.exists(new Path(tmp, "_SUCCESS"))
     if (tmpComplete) { // crash between steps 2 and 3: roll the commit forward
-      if (!fs.rename(tmp, target))
-        throw new java.io.IOException(s"recovery rename $tmp -> $dir failed")
+      rename(fs, tmp, target)
       fs.delete(old, true)
     } else if (fs.exists(old)) { // crash mid-step-1 write after a prior set-aside
-      if (!fs.rename(old, target))
-        throw new java.io.IOException(s"recovery rename $old -> $dir failed")
+      rename(fs, old, target)
       fs.delete(tmp, true)
     }
     // neither: the dir never existed — nothing to recover

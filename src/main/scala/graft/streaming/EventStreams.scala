@@ -153,10 +153,13 @@ object EventStreams {
   }
 
   /** Idempotent micro-batch upsert sink: every micro-batch goes through the
-    * S12 dedup-then-union upsert keyed on `key`, so a replayed batch (after
-    * a failure/restart) is a no-op — exactly-once EFFECTS on top of Spark's
-    * at-least-once batch replay, the streaming face of the reference's
-    * INSERT OR IGNORE.
+    * S12 staged append keyed on `key` (`ScrapeJob.appendDedup`): only the
+    * batch's new keys are written, to a staging dir, then renamed into
+    * `dir`. A batch replayed after a failure/restart, even one that crashed
+    * mid-commit, appends only the keys `dir` still lacks, so its effects
+    * happen exactly once on top of Spark's at-least-once batch replay — the
+    * streaming face of the reference's INSERT OR IGNORE. Each batch costs
+    * its own size plus a read of the stored key column.
     */
   def writeUpsertStream(events: DataFrame, dir: String, checkpoint: String,
       key: String = "event_id"): org.apache.spark.sql.streaming.StreamingQuery =

@@ -1,5 +1,7 @@
 package graft.jobs
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -17,9 +19,109 @@ class JobsSpec extends SparkSpec {
     val got = spark.read.parquet(dir).orderBy("link_id")
       .as[(Long, String)].collect().toSeq
     assert(got == Seq((1L, "x"), (2L, "y"), (3L, "z")))
-    // replaying the same batch is a no-op
+    // replaying the same batch is a no-op: not one data file changes
+    val before = files(dir)
     ScrapeJob.appendDedup(spark, b, dir, "link_id")
     assert(spark.read.parquet(dir).count() == 3)
+    assert(files(dir) == before)
+  }
+
+  /** Every file under `dir`, by name, with the SHA-256 of its bytes. */
+  private def files(dir: String): Map[String, String] = {
+    val ds = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try ds.iterator().asScala.map(p => p.getFileName.toString ->
+      java.util.HexFormat.of().formatHex(java.security.MessageDigest
+        .getInstance("SHA-256").digest(java.nio.file.Files.readAllBytes(p)))).toMap
+    finally ds.close()
+  }
+
+  private def table(dir: String): Seq[(Long, String)] =
+    spark.read.parquet(dir).as[(Long, String)].collect().toSeq.sorted
+
+  private val week1 = Seq((1L, "x"), (2L, "y"))
+  private val week2 = Seq((2L, "y2"), (3L, "z"), (4L, "w"), (5L, "v"))
+  private val uncrashed = Seq((1L, "x"), (2L, "y"), (3L, "z"), (4L, "w"), (5L, "v"))
+
+  test("appendDedup writes only the new rows: every stored file is left as it was") {
+    val dir = java.nio.file.Files.createTempDirectory("props_append").toString + "/t"
+    ScrapeJob.appendDedup(spark, week1.toDF("link_id", "v"), dir, "link_id")
+    val before = files(dir)
+    ScrapeJob.appendDedup(spark, week2.toDF("link_id", "v"), dir, "link_id")
+    val after = files(dir)
+    assert(before.forall { case (n, sha) => after.get(n).contains(sha) })
+    assert(after.size > before.size)
+    assert(table(dir) == uncrashed)
+    assert(!new java.io.File(dir + "__append").exists())
+  }
+
+  test("appendDedup of an empty batch: the first run creates the store with " +
+      "the batch's schema, a later one changes no file") {
+    val dir = java.nio.file.Files.createTempDirectory("props_empty").toString + "/t"
+    val empty = Seq.empty[(Long, String)].toDF("link_id", "v")
+    ScrapeJob.appendDedup(spark, empty, dir, "link_id")
+    assert(spark.read.parquet(dir).columns.toSeq == Seq("link_id", "v"))
+    assert(table(dir).isEmpty)
+    ScrapeJob.appendDedup(spark, week1.toDF("link_id", "v"), dir, "link_id")
+    val before = files(dir)
+    ScrapeJob.appendDedup(spark, empty, dir, "link_id")
+    assert(files(dir) == before)
+    assert(table(dir) == week1)
+  }
+
+  /** The staged append crashed in state `crash` (given the store dir and
+    * its staging dir, holding week 1), then week 2 is replayed. */
+  private def crashThenReplay(crash: (String, String) => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("props_staged").toString + "/t"
+    ScrapeJob.appendDedup(spark, week1.toDF("link_id", "v"), dir, "link_id")
+    crash(dir, dir + "__append")
+    ScrapeJob.appendDedup(spark, week2.toDF("link_id", "v"), dir, "link_id")
+    val got = table(dir) // sorted rows: a duplicate link_id or a lost row shows
+    assert(got == uncrashed, s"replay after the crash gave $got")
+    assert(!new java.io.File(dir + "__append").exists())
+  }
+
+  /** Week 2's new rows as step 1 stages them, in two data files. */
+  private def stageWeek2(stage: String): Unit = {
+    Seq((3L, "z")).toDF("link_id", "v").write.mode("overwrite").parquet(stage)
+    Seq((4L, "w"), (5L, "v")).toDF("link_id", "v").write.mode("append").parquet(stage)
+  }
+
+  test("staged append, crash mid-write (no _SUCCESS): the replay converges") {
+    crashThenReplay { (_, stage) =>
+      Seq((3L, "z")).toDF("link_id", "v").write.parquet(stage)
+      assert(new java.io.File(stage, "_SUCCESS").delete())
+    }
+  }
+
+  test("staged append, crash after the write, before any rename: the replay converges") {
+    crashThenReplay((_, stage) => stageWeek2(stage))
+  }
+
+  test("staged append, crash after some renames: the replay converges") {
+    crashThenReplay { (dir, stage) =>
+      stageWeek2(stage)
+      val first = files(stage).keySet.filter(_.startsWith("part-")).min
+      assert(new java.io.File(stage, first).renameTo(new java.io.File(dir, first)))
+    }
+  }
+
+  test("appendDedup refuses a batch whose schema differs from the store's, " +
+      "before writing any file") {
+    val dir = java.nio.file.Files.createTempDirectory("props_schema").toString + "/t"
+    ScrapeJob.appendDedup(spark, week1.toDF("link_id", "v"), dir, "link_id")
+    val before = files(dir)
+    val extra = intercept[IllegalArgumentException] {
+      ScrapeJob.appendDedup(spark, Seq((3L, "z", 1.0)).toDF("link_id", "v", "extra"),
+        dir, "link_id")
+    }
+    assert(extra.getMessage.contains("extra only in the batch"), extra.getMessage)
+    val retyped = intercept[IllegalArgumentException] {
+      ScrapeJob.appendDedup(spark, Seq((3L, 7)).toDF("link_id", "v"), dir, "link_id")
+    }
+    assert(retyped.getMessage.contains("v is int in the batch, string in the store"),
+      retyped.getMessage)
+    assert(files(dir) == before)
+    assert(!new java.io.File(dir + "__append").exists())
   }
 
   test("appendDedup after a crashed swap window: store recovered, not " +
@@ -95,6 +197,30 @@ class JobsSpec extends SparkSpec {
     // re-run with the same snapshot: idempotent (no property dup, statuses keep)
     ScrapeJob.run(spark, linksDir, propsDir, index, fetcher, now)
     assert(spark.read.parquet(propsDir).count() == 1)
+  }
+
+  test("ScrapeJob.run fetches each sub-sitemap and each pending page exactly once") {
+    val base = java.nio.file.Files.createTempDirectory("scrape_once").toString
+    val subs = (1 to 3).map(i => s"https://x.be/sitemap-classified-$i.xml")
+    val index = subs.map(s => s"<sitemap><loc>$s</loc></sitemap>")
+      .mkString("<sitemapindex>", "", "</sitemapindex>")
+    val listings = subs.indices.map(i => subs(i) -> (1 to 4).map(j =>
+      s"https://www.immoweb.be/en/classified/house/for-sale/gent/9000/${1000 * (i + 1) + j}"))
+    val page = """<html><script>
+      window.classified = {"property":{"type":"HOUSE","subtype":"VILLA",
+        "location":{"locality":"Gent","postalCode":"9000","latitude":51.0,"longitude":3.7}},
+      "transaction":{"sale":{"price":300000},
+        "certificates":{"epcScore":"B","primaryEnergyConsumptionPerSqm":250}}};
+      </script></html>"""
+    val bodies = listings.map { case (sub, urls) =>
+      sub -> urls.map(u => s"""<url><xhtml:link rel="alternate" hreflang="en-BE" href="$u"/></url>""")
+        .mkString("<urlset>", "", "</urlset>")
+    }.toMap ++ listings.flatMap(_._2).map(_ -> page)
+    val fetcher = new UrlCountingFetcher(bodies)
+    ScrapeJob.run(spark, s"$base/links", s"$base/properties", index, fetcher,
+      java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
+    assert(fetcher.counts == bodies.keySet.map(_ -> 1).toMap)
+    assert(spark.read.parquet(s"$base/properties").count() == 12)
   }
 
   test("fetchPages: mapPartitions fetch covers every URL across partitions " +
@@ -220,4 +346,24 @@ class CountingFetcher extends graft.ingest.Sitemap.Fetcher {
 }
 object CountingFetcher {
   val count = new java.util.concurrent.atomic.AtomicInteger(0)
+}
+
+/** Serves canned bodies and counts fetches per URL in a JVM-global, so
+  * task-side fetches are visible to the driver in local mode. Reset on
+  * construction (one instance per test).
+  */
+class UrlCountingFetcher(bodies: Map[String, String]) extends graft.ingest.Sitemap.Fetcher {
+  UrlCountingFetcher.counts.clear()
+  def fetch(url: String): String = {
+    UrlCountingFetcher.counts
+      .computeIfAbsent(url, _ => new java.util.concurrent.atomic.AtomicInteger)
+      .incrementAndGet()
+    bodies(url)
+  }
+  def counts: Map[String, Int] =
+    UrlCountingFetcher.counts.asScala.map { case (u, n) => u -> n.get }.toMap
+}
+object UrlCountingFetcher {
+  val counts =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
 }
