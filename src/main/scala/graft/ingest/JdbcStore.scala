@@ -55,7 +55,7 @@ object JdbcStore {
   }
 
   /** Append rows to a JDBC table (created on first write). The reference's
-    * INSERT OR IGNORE semantics live one level up (ScrapeJob.appendDedup
+    * INSERT OR IGNORE semantics live one level up (io.Commit.append
     * anti-joins against the existing keys before appending).
     */
   def writeTable(df: DataFrame, url: String, table: String,

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.io.Commit
+
 /** MERGE INTO emulation (upsert + delete in one pass) for plain-parquet
   * targets — the operation the reference performs row-at-a-time with
   * `INSERT OR IGNORE` / status `UPDATE` (scraper.py's link-store writes),
@@ -19,7 +21,7 @@ import org.apache.spark.sql.functions._
   * target is bucketed on the key — io/Bucketing.scala). At 100 TB the
   * rewrite is narrowed to touched partitions: join source against the
   * partition-pruned slice of the target, rewrite only those partitions
-  * atomically (jobs.ScrapeJob.overwriteAtomic is the committer). AQE
+  * atomically (io.Commit.overwriteLeaves is the committer). AQE
   * handles a skewed merge key; no driver-side state.
   */
 object Merge {
@@ -127,75 +129,9 @@ object Merge {
       deleteWhen: Column = lit(false)): Unit = {
     val (touched, merged) = mergePartitionedPlan(spark, targetDir, source,
       keys, partCol, updates, insertWhen, deleteWhen)
-    if (touched.isEmpty) return
-
-    val tmp = targetDir + "__tmp"
-    merged.write.mode("overwrite").partitionBy(partCol).parquet(tmp)
-
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(targetDir), spark.sparkContext.hadoopConfiguration)
-    // Set-asides live in a SIBLING dir, never inside targetDir: a crash
-    // mid-swap must not leave a `leaf__old` dir where partition discovery
-    // would parse it as a bogus partition value (forcing partCol to string
-    // and excluding the data from the isin slice on the next run).
-    val aside = new org.apache.hadoop.fs.Path(setAsideDir(targetDir))
-    touched.foreach { v =>
-      val leaf = s"$partCol=$v"
-      val src = new org.apache.hadoop.fs.Path(tmp, leaf)
-      val dst = new org.apache.hadoop.fs.Path(targetDir, leaf)
-      val old = new org.apache.hadoop.fs.Path(aside, leaf)
-      if (fs.exists(dst)) {
-        fs.mkdirs(aside)
-        if (fs.exists(old)) fs.delete(old, true)
-        if (!fs.rename(dst, old))
-          throw new java.io.IOException(s"rename $dst -> $old failed")
-      }
-      if (fs.exists(src)) { // absent = every row of this partition deleted
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"rename $src -> $dst failed")
-      }
-    }
-    fs.delete(aside, true)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-  }
-
-  private[graft] def setAsideDir(targetDir: String): String =
-    targetDir.stripSuffix("/") + "__setaside"
-
-  /** Recover a partitioned target after a crash mid-[[mergePartitioned]]
-    * swap loop. For every set-aside leaf: if the target leaf is missing the
-    * swap was interrupted — roll it BACK (restore the pre-merge partition;
-    * replaying the idempotent merge re-applies the change); if the target
-    * leaf exists the swap committed — drop the set-aside. Also heals any
-    * legacy in-target `leaf__old` dir from the pre-round-6 protocol.
-    * Idempotent; called by [[mergePartitionedPlan]] before every read.
-    */
-  private[graft] def recoverPartitioned(spark: org.apache.spark.sql.SparkSession,
-      targetDir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(targetDir), spark.sparkContext.hadoopConfiguration)
-    val aside = new org.apache.hadoop.fs.Path(setAsideDir(targetDir))
-    if (fs.exists(aside)) {
-      fs.listStatus(aside).foreach { st =>
-        val dst = new org.apache.hadoop.fs.Path(targetDir, st.getPath.getName)
-        if (!fs.exists(dst)) {
-          if (!fs.rename(st.getPath, dst))
-            throw new java.io.IOException(s"recovery rename ${st.getPath} -> $dst failed")
-        } else fs.delete(st.getPath, true)
-      }
-      fs.delete(aside, true)
-    }
-    val target = new org.apache.hadoop.fs.Path(targetDir)
-    if (fs.exists(target)) {
-      fs.listStatus(target).filter(_.getPath.getName.endsWith("__old")).foreach { st =>
-        val leaf = st.getPath.getName.stripSuffix("__old")
-        val dst = new org.apache.hadoop.fs.Path(targetDir, leaf)
-        if (!fs.exists(dst)) {
-          if (!fs.rename(st.getPath, dst))
-            throw new java.io.IOException(s"recovery rename ${st.getPath} -> $dst failed")
-        } else fs.delete(st.getPath, true)
-      }
-    }
+    if (touched.nonEmpty)
+      Commit.overwriteLeaves(spark, targetDir, touched.map(v => s"$partCol=$v"))(
+        merged.write.partitionBy(partCol).parquet(_))
   }
 
   /** The read+merge plan of [[mergePartitioned]] without the write, exposed
@@ -216,7 +152,8 @@ object Merge {
       .collect().map(_.get(0)).toSeq.sortBy(_.toString)
     if (touched.isEmpty) return (touched, source.limit(0))
 
-    recoverPartitioned(spark, targetDir) // heal a crashed prior swap loop
+    // heal a crashed prior swap loop before the read
+    require(Commit.exists(spark, targetDir), s"mergePartitioned: no target at $targetDir")
     val target = spark.read.parquet(targetDir)
     val slice = target.filter(col(partCol).isin(touched: _*))
     // Plan-embedded enforcement of the partCol-stability contract (same

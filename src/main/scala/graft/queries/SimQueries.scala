@@ -1323,7 +1323,7 @@ object SimQueries extends QueryGroup {
     Some(ivfPqOracle))
 
   /** Saved-index IVF-PQ probe (Pq.buildIvfPqIndex → saveIvfPqIndex →
-    * loadIvfPqIndex → queryIvfPqIndex): the q143 caching pattern — index
+    * loadIvfPqIndex → queryIvfPqIndex) through [[IndexCache]] — index
     * keyed by a content fingerprint of the source parquet, built once
     * under a temp dir and atomically published, codes partitioned by
     * coarse cell so the probe join prunes unprobed cells at the file
@@ -1332,39 +1332,12 @@ object SimQueries extends QueryGroup {
   val q264IvfPqSaved = QueryDef(
     "q264_ivfpq_saved",
     (s, d) => {
-      val hconf = s.sparkContext.hadoopConfiguration
-      val srcPath = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
-      val srcFs = srcPath.getFileSystem(hconf)
-      val fp = {
-        val parts = srcFs.listStatus(srcPath).filter(_.isFile)
-          .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-          .sorted.mkString("|")
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(parts.getBytes("UTF-8"))
-          .take(8).map(b => f"$b%02x").mkString
-      }
-      val idxBase = sys.props("java.io.tmpdir") +
-        "/graft_ivfpq_v1_" + d.replaceAll("[^A-Za-z0-9]", "_")
-      val idxDir = s"${idxBase}_$fp"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        java.net.URI.create(idxDir), hconf)
-      // _SUCCESS gates completeness: a half-written index rebuilds rather
-      // than serving partial cells
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$idxDir/codes/_SUCCESS"))) {
-        val tmpDir = s"${idxDir}__build_${java.util.UUID.randomUUID().toString.take(8)}"
-        val idx = graft.sim.Pq.buildIvfPqIndex(Tables.embeddings(s, d),
-          "vec_id", "embedding", dim = 64, nLists = 8, m = 4, ksub = 8,
-          iters = 1)
-        graft.sim.Pq.saveIvfPqIndex(idx, tmpDir)
-        if (!fs.rename(new org.apache.hadoop.fs.Path(tmpDir),
-              new org.apache.hadoop.fs.Path(idxDir)))
-          fs.delete(new org.apache.hadoop.fs.Path(tmpDir), true) // lost the race: winner's index is complete
-        val parent = new org.apache.hadoop.fs.Path(idxDir).getParent
-        val base = new org.apache.hadoop.fs.Path(idxBase).getName
-        fs.globStatus(new org.apache.hadoop.fs.Path(parent, base + "_*"))
-          .filter(st => st.getPath.getName != s"${base}_$fp" &&
-            !st.getPath.getName.contains("__build_"))
-          .foreach(st => fs.delete(st.getPath, true))
+      // the pre-IndexCache tag (no contract hash): existing caches stay valid
+      val idxDir = IndexCache.cachedDir(s, s"$d/embeddings.parquet",
+        IndexCache.tagFor("graft_ivfpq_v1_", d), "codes/_SUCCESS") { tmpDir =>
+        graft.sim.Pq.saveIvfPqIndex(graft.sim.Pq.buildIvfPqIndex(
+          Tables.embeddings(s, d), "vec_id", "embedding", dim = 64, nLists = 8,
+          m = 4, ksub = 8, iters = 1), tmpDir)
       }
       val idx = graft.sim.Pq.loadIvfPqIndex(s, idxDir)
       graft.sim.Pq.queryIvfPqIndex(idx,

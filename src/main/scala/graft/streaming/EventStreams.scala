@@ -153,7 +153,7 @@ object EventStreams {
   }
 
   /** Idempotent micro-batch upsert sink: every micro-batch goes through the
-    * S12 staged append keyed on `key` (`ScrapeJob.appendDedup`): only the
+    * S12 staged append keyed on `key` (`io.Commit.append`): only the
     * batch's new keys are written, to a staging dir, then renamed into
     * `dir`. A batch replayed after a failure/restart, even one that crashed
     * mid-commit, appends only the keys `dir` still lacks, so its effects
@@ -166,8 +166,7 @@ object EventStreams {
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.jobs.ScrapeJob.appendDedup(
-          batch.sparkSession, batch.toDF(), dir, key)
+        graft.io.Commit.append(batch.sparkSession, batch.toDF(), dir, key)
       }
       .start()
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.jobs.ScrapeJob
+import graft.io.Commit
 import graft.ops.EventAnalytics
 
 /** Streaming multi-window SLO burn monitor: the production twin of the
@@ -46,7 +46,7 @@ object SloStreams {
         .as("hour"), col("total"), col("errors"))
     val report = EventAnalytics.sloBurnFromHourly(stored, budget,
       longBuckets, threshold)
-    ScrapeJob.overwriteAtomic(spark, report, reportDir)
+    Commit.overwrite(spark, reportDir)(report.write.parquet(_))
   }
 
   /** Wire the hourly stream into the monitor (foreachBatch). */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.jobs.ScrapeJob
+import graft.io.Commit
 import graft.ops.Merge
 
 /** Streaming upsert sink: `foreachBatch` + MERGE (ops/Merge.scala) into a
@@ -21,7 +21,7 @@ import graft.ops.Merge
   *
   * Scale shape: one full-outer join per batch on the merge key (the same
   * plan the batch MERGE operator produces); the atomic target swap is the
-  * HDFS/S3A-safe temp-dir commit (jobs.ScrapeJob.overwriteAtomic). At
+  * HDFS/S3A-safe temp-dir commit (io.Commit.overwrite). At
   * 100 TB the target is partitioned and the join+rewrite narrows to the
   * partitions the batch touches.
   */
@@ -54,17 +54,13 @@ object UpsertSink {
     val latest = batch.withColumn("__graft_rn", row_number().over(w))
       .filter(col("__graft_rn") === 1).drop("__graft_rn")
 
-    // roll forward/back any commit interrupted by a crash BEFORE reading:
-    // a missing target must never be mistaken for an empty store (that
-    // would silently rebuild from this batch alone)
-    ScrapeJob.recoverAtomic(spark, targetDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(targetDir), spark.sparkContext.hadoopConfiguration)
+    // Commit.exists rolls forward/back any commit interrupted by a crash
+    // BEFORE reading: a missing target must never be mistaken for an empty
+    // store (that would silently rebuild from this batch alone)
     val target =
-      if (fs.exists(new org.apache.hadoop.fs.Path(targetDir)))
-        spark.read.parquet(targetDir)
+      if (Commit.exists(spark, targetDir)) spark.read.parquet(targetDir)
       else latest.filter(lit(false))
-    ScrapeJob.overwriteAtomic(spark, Merge.merge(target, latest, keys), targetDir)
+    Commit.overwrite(spark, targetDir)(Merge.merge(target, latest, keys).write.parquet(_))
   }
 
   /** Wire a streaming frame into the sink (AvailableNow: drain-and-stop,

@@ -1,0 +1,34 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** [[graft.io.Commit]] is the one module under src/main that knows the
+  * on-disk commit policy (the [[SessionFactorySpec]] source-scan idea). */
+class CommitLintSpec extends AnyFunSuite {
+
+  private val root = java.nio.file.Paths.get("src/main/scala/graft")
+
+  /** The files under src/main/scala/graft, relative to it, that contain `needle`. */
+  private def filesWith(needle: String): List[String] = {
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p).contains(needle))
+      .map(root.relativize(_).toString).toList.sorted
+    finally walk.close()
+  }
+
+  test("only io/Commit.scala and IndexCache's content-addressed publish rename") {
+    assert(filesWith(".rename(") == List("io/Commit.scala", "queries/IndexCache.scala"))
+  }
+
+  test("the commit siblings are named only in io/Commit.scala") {
+    for (suffix <- Seq("__tmp", "__old", "__append", "__setaside"))
+      assert(filesWith(suffix) == List("io/Commit.scala"), suffix)
+  }
+
+  test("no file outside jobs/ mentions ScrapeJob") {
+    assert(filesWith("ScrapeJob").filterNot(_.startsWith("jobs/")) == Nil)
+  }
+}

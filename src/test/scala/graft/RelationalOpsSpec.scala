@@ -132,7 +132,7 @@ class RelationalOpsSpec extends SparkSpec {
     // set-aside dir and died before renaming the merged tmp into place.
     val fs = org.apache.hadoop.fs.FileSystem.get(
       java.net.URI.create(dir), spark.sparkContext.hadoopConfiguration)
-    val aside = new org.apache.hadoop.fs.Path(Merge.setAsideDir(dir))
+    val aside = new org.apache.hadoop.fs.Path(dir + "__setaside")
     fs.mkdirs(aside)
     assert(fs.rename(new org.apache.hadoop.fs.Path(dir, "p=0"),
       new org.apache.hadoop.fs.Path(aside, "p=0")))

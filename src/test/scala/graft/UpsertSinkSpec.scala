@@ -86,7 +86,7 @@ class UpsertSinkSpec extends SparkSpec {
     val b1 = Seq((1L, "a", 10L), (2L, "b", 11L)).toDF("k", "v", "seq")
     UpsertSink.applyBatch(spark, b1, target, Seq("k"), "seq")
 
-    // Simulate the overwriteAtomic crash window of the NEXT commit: the new
+    // Simulate the Commit.overwrite crash window of the NEXT commit: the new
     // state is fully written at target__tmp (with _SUCCESS) and the target
     // has been renamed aside — the process died before the final swap.
     val src = java.nio.file.Paths.get(target)
@@ -117,7 +117,7 @@ class UpsertSinkSpec extends SparkSpec {
     java.nio.file.Files.delete(tmp.resolve("_SUCCESS"))
     java.nio.file.Files.move(src, java.nio.file.Paths.get(target + "__old"))
 
-    graft.jobs.ScrapeJob.recoverAtomic(spark, target)
+    assert(graft.io.Commit.exists(spark, target))
     val got = spark.read.parquet(target).as[(Long, String, Long)].collect().toSeq
     assert(got == Seq((1L, "a", 10L)))
     assert(!java.nio.file.Files.exists(tmp), "incomplete tmp must be discarded")

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.io.Commit
 
 class JobsSpec extends SparkSpec {
   import spark.implicits._
@@ -12,16 +13,16 @@ class JobsSpec extends SparkSpec {
   test("S12: appendDedup is an idempotent INSERT-OR-IGNORE (dedup-then-union)") {
     val dir = java.nio.file.Files.createTempDirectory("props").toString + "/t"
     val a = Seq((1L, "x"), (2L, "y")).toDF("link_id", "v")
-    ScrapeJob.appendDedup(spark, a, dir, "link_id")
+    Commit.append(spark, a, dir, "link_id")
     // second batch overlaps on key 2 — existing row wins, only key 3 appends
     val b = Seq((2L, "y2"), (3L, "z")).toDF("link_id", "v")
-    ScrapeJob.appendDedup(spark, b, dir, "link_id")
+    Commit.append(spark, b, dir, "link_id")
     val got = spark.read.parquet(dir).orderBy("link_id")
       .as[(Long, String)].collect().toSeq
     assert(got == Seq((1L, "x"), (2L, "y"), (3L, "z")))
     // replaying the same batch is a no-op: not one data file changes
     val before = files(dir)
-    ScrapeJob.appendDedup(spark, b, dir, "link_id")
+    Commit.append(spark, b, dir, "link_id")
     assert(spark.read.parquet(dir).count() == 3)
     assert(files(dir) == before)
   }
@@ -44,9 +45,9 @@ class JobsSpec extends SparkSpec {
 
   test("appendDedup writes only the new rows: every stored file is left as it was") {
     val dir = java.nio.file.Files.createTempDirectory("props_append").toString + "/t"
-    ScrapeJob.appendDedup(spark, week1.toDF("link_id", "v"), dir, "link_id")
+    Commit.append(spark, week1.toDF("link_id", "v"), dir, "link_id")
     val before = files(dir)
-    ScrapeJob.appendDedup(spark, week2.toDF("link_id", "v"), dir, "link_id")
+    Commit.append(spark, week2.toDF("link_id", "v"), dir, "link_id")
     val after = files(dir)
     assert(before.forall { case (n, sha) => after.get(n).contains(sha) })
     assert(after.size > before.size)
@@ -58,12 +59,12 @@ class JobsSpec extends SparkSpec {
       "the batch's schema, a later one changes no file") {
     val dir = java.nio.file.Files.createTempDirectory("props_empty").toString + "/t"
     val empty = Seq.empty[(Long, String)].toDF("link_id", "v")
-    ScrapeJob.appendDedup(spark, empty, dir, "link_id")
+    Commit.append(spark, empty, dir, "link_id")
     assert(spark.read.parquet(dir).columns.toSeq == Seq("link_id", "v"))
     assert(table(dir).isEmpty)
-    ScrapeJob.appendDedup(spark, week1.toDF("link_id", "v"), dir, "link_id")
+    Commit.append(spark, week1.toDF("link_id", "v"), dir, "link_id")
     val before = files(dir)
-    ScrapeJob.appendDedup(spark, empty, dir, "link_id")
+    Commit.append(spark, empty, dir, "link_id")
     assert(files(dir) == before)
     assert(table(dir) == week1)
   }
@@ -72,9 +73,9 @@ class JobsSpec extends SparkSpec {
     * its staging dir, holding week 1), then week 2 is replayed. */
   private def crashThenReplay(crash: (String, String) => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("props_staged").toString + "/t"
-    ScrapeJob.appendDedup(spark, week1.toDF("link_id", "v"), dir, "link_id")
+    Commit.append(spark, week1.toDF("link_id", "v"), dir, "link_id")
     crash(dir, dir + "__append")
-    ScrapeJob.appendDedup(spark, week2.toDF("link_id", "v"), dir, "link_id")
+    Commit.append(spark, week2.toDF("link_id", "v"), dir, "link_id")
     val got = table(dir) // sorted rows: a duplicate link_id or a lost row shows
     assert(got == uncrashed, s"replay after the crash gave $got")
     assert(!new java.io.File(dir + "__append").exists())
@@ -108,15 +109,15 @@ class JobsSpec extends SparkSpec {
   test("appendDedup refuses a batch whose schema differs from the store's, " +
       "before writing any file") {
     val dir = java.nio.file.Files.createTempDirectory("props_schema").toString + "/t"
-    ScrapeJob.appendDedup(spark, week1.toDF("link_id", "v"), dir, "link_id")
+    Commit.append(spark, week1.toDF("link_id", "v"), dir, "link_id")
     val before = files(dir)
     val extra = intercept[IllegalArgumentException] {
-      ScrapeJob.appendDedup(spark, Seq((3L, "z", 1.0)).toDF("link_id", "v", "extra"),
+      Commit.append(spark, Seq((3L, "z", 1.0)).toDF("link_id", "v", "extra"),
         dir, "link_id")
     }
     assert(extra.getMessage.contains("extra only in the batch"), extra.getMessage)
     val retyped = intercept[IllegalArgumentException] {
-      ScrapeJob.appendDedup(spark, Seq((3L, 7)).toDF("link_id", "v"), dir, "link_id")
+      Commit.append(spark, Seq((3L, 7)).toDF("link_id", "v"), dir, "link_id")
     }
     assert(retyped.getMessage.contains("v is int in the batch, string in the store"),
       retyped.getMessage)
@@ -127,9 +128,9 @@ class JobsSpec extends SparkSpec {
   test("appendDedup after a crashed swap window: store recovered, not " +
       "silently rebuilt from the batch alone") {
     val dir = java.nio.file.Files.createTempDirectory("props_crash").toString + "/t"
-    ScrapeJob.appendDedup(spark, Seq((1L, "x"), (2L, "y")).toDF("link_id", "v"),
+    Commit.append(spark, Seq((1L, "x"), (2L, "y")).toDF("link_id", "v"),
       dir, "link_id")
-    // simulate a crash between overwriteAtomic steps 2 and 3: target renamed
+    // simulate a crash between Commit.overwrite steps 2 and 3: target renamed
     // aside, the next state complete at __tmp
     val fs = org.apache.hadoop.fs.FileSystem.get(
       java.net.URI.create(dir), spark.sparkContext.hadoopConfiguration)
@@ -139,7 +140,7 @@ class JobsSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(dir + "__old")))
     // a replayed append must roll the commit forward FIRST — merging against
     // the 3-row recovered store, not rebuilding from this 1-row batch
-    ScrapeJob.appendDedup(spark, Seq((4L, "w")).toDF("link_id", "v"),
+    Commit.append(spark, Seq((4L, "w")).toDF("link_id", "v"),
       dir, "link_id")
     val got = spark.read.parquet(dir).orderBy("link_id")
       .as[(Long, String)].collect().toSeq
@@ -149,9 +150,9 @@ class JobsSpec extends SparkSpec {
 
   test("overwriteAtomic swaps the directory without partial states") {
     val dir = java.nio.file.Files.createTempDirectory("ow").toString + "/t"
-    ScrapeJob.overwriteAtomic(spark, Seq(1, 2, 3).toDF("v"), dir)
+    Commit.overwrite(spark, dir)(Seq(1, 2, 3).toDF("v").write.parquet(_))
     assert(spark.read.parquet(dir).count() == 3)
-    ScrapeJob.overwriteAtomic(spark, Seq(4).toDF("v"), dir)
+    Commit.overwrite(spark, dir)(Seq(4).toDF("v").write.parquet(_))
     assert(spark.read.parquet(dir).as[Int].collect().toSeq == Seq(4))
   }
 
@@ -243,11 +244,11 @@ class JobsSpec extends SparkSpec {
     // preflight must NOT block the first scheduled run
     PreflightJob.run(spark, linksDir, propsDir)
     // valid store -> ok (properties absent is allowed: first run has none)
-    ScrapeJob.overwriteAtomic(spark,
-      graft.ingest.LinkState.emptyLinks(spark), linksDir)
+    Commit.overwrite(spark, linksDir)(
+      graft.ingest.LinkState.emptyLinks(spark).write.parquet(_))
     PreflightJob.run(spark, linksDir, propsDir)
     // present-but-misshapen store -> refuse
-    ScrapeJob.overwriteAtomic(spark, Seq((1L, "x")).toDF("id", "whatever"), linksDir)
+    Commit.overwrite(spark, linksDir)(Seq((1L, "x")).toDF("id", "whatever").write.parquet(_))
     intercept[IllegalArgumentException] {
       PreflightJob.run(spark, linksDir, propsDir)
     }
@@ -297,6 +298,19 @@ class JobsSpec extends SparkSpec {
       graft.enrich.Geocode.cacheSchema)
     assert(graft.Preprocessing.run(graft.io.ExportCsv.read(spark, csv), emptyCache)
       .count() == n)
+  }
+
+  test("PreprocessJob commits both outputs: a rerun leaves only clean.parquet " +
+      "and clean_csv in the output dir") {
+    val base = java.nio.file.Files.createTempDirectory("train_rerun").toString
+    val (props, csv, clean) = (s"$base/properties", s"$base/export_csv", s"$base/clean")
+    propertiesFixture.write.parquet(props)
+    ExportJob.run(spark, props, csv)
+    PreprocessJob.run(spark, csv, s"$base/no_geocache", clean)
+    val n = spark.read.parquet(s"$clean/clean.parquet").count()
+    PreprocessJob.run(spark, csv, s"$base/no_geocache", clean)
+    assert(new java.io.File(clean).list().toSeq.sorted == Seq("clean.parquet", "clean_csv"))
+    assert(spark.read.parquet(s"$clean/clean.parquet").count() == n)
   }
 
   test("ModelJob fails with a clear error when no feature passes the " +
