@@ -129,31 +129,23 @@ object Layout {
     * and the heavy head spreads evenly (the deterministic near-LPT
     * heuristic). Per-shard totals then differ by at most one pass's spread.
     *
-    * The global rank is computed SCALABLY: range-repartition on the sort
-    * key + in-partition sort gives a total order across partitions, and
-    * `zipWithIndex` assigns contiguous indices with one extra (cheap)
-    * count job for the per-partition offsets — no single-partition window
-    * anywhere. The rank is deterministic because (weight desc, id) is a
-    * total order regardless of where the sampled range boundaries land.
+    * The global rank comes from [[graft.ops.RangeScan.rank]] (range
+    * partitions, per-partition running counts, broadcast offsets) — no
+    * single-partition window anywhere. The rank is deterministic because
+    * (weight desc, id) is a total order regardless of where the sampled
+    * range boundaries land; as in `ORDER BY weight DESC`, NaN weights come
+    * first and null weights last.
     */
   def balancedShards(df: DataFrame, idCol: String, weightCol: String,
       nShards: Int): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df.repartitionByRange(col(weightCol).desc, col(idCol))
-      .sortWithinPartitions(col(weightCol).desc, col(idCol))
-    val schema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
-        "__rank", org.apache.spark.sql.types.LongType, nullable = false))
-    val ranked = spark.createDataFrame(
-      sorted.rdd.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-      }, schema)
+    val w = col(weightCol)
+    val rank = col("__rank") - 1
     val n = lit(nShards.toLong)
-    val pass = floor(col("__rank") / n)
-    val pos = col("__rank") % n
-    ranked.withColumn("shard",
-      when(pass % 2 === 0, pos).otherwise(n - 1 - pos).cast("int"))
-      .drop("__rank")
+    val pass = floor(rank / n)
+    val pos = rank % n
+    graft.ops.RangeScan.rank(df, struct(w.isNull, !isnan(w), -w, col(idCol))).df
+      .withColumn("shard", when(pass % 2 === 0, pos).otherwise(n - 1 - pos).cast("int"))
+      .drop("__rank", "__rows")
   }
 
   /** Deterministic pseudo-random training order inside a shard (or stream):

@@ -308,17 +308,17 @@ object EventAnalytics {
     * subject id tie-break) — replicated exactly WITHOUT a global-sort
     * window: subjects scale with data, so `ntile(5).over(Window.orderBy
     * (…))` (three successive single-partition sorts of every subject row)
-    * is the canonical scale killer. Instead each metric's exact 0-based
-    * rank comes from [[graft.ops.DenseId.withDenseId]]'s range-partition +
-    * per-partition-ordinal + broadcast-offset scaffold (distributed sort,
-    * no WindowExec at all), and the bucket is the closed-form standard
+    * is the canonical scale killer. Instead each metric's exact rank comes
+    * from [[RangeScan.rank]] (range partitions, per-partition running
+    * counts, broadcast offsets), and the bucket is the closed-form standard
     * ntile of (rank, n): the first n mod 5 buckets take ceil(n/5) rows,
     * the rest floor(n/5) — bit-identical to NTILE(5) in both engines.
-    * Recency's DESC order rides the same ascending scaffold on the
-    * negated value. Scale shape: one map-side-combined groupBy collapses
-    * events to the per-subject table; three range-repartitions of that
-    * table (each a distributed sort + ≤#partitions driver offset barrier);
-    * the stream-edge max is a 1-row broadcast.
+    * Recency's DESC order rides the same ascending scan on the negated
+    * value. Scale shape: one map-side-combined groupBy collapses events to
+    * the per-subject table; one range-repartition of that table stacked
+    * ×3, one row per metric (a distributed sort + ≤#partitions driver
+    * offset barrier); one keyed groupBy puts each subject's three scores
+    * back on one row; the stream-edge max is a 1-row broadcast.
     */
   def rfm(df: DataFrame, key: String, ts: String, value: Column,
       monetaryWhen: Column): DataFrame = {
@@ -334,16 +334,16 @@ object EventAnalytics {
     val base = per.crossJoin(broadcast(gmax))
       .withColumn("recency_days",
         expr("(__gmax_us - __last_us) DIV 86400000000"))
-      .withColumn("__negr", -col("recency_days"))
-    val ranked = graft.ops.DenseId.withDenseId(
-      graft.ops.DenseId.withDenseId(
-        graft.ops.DenseId.withDenseId(
-          base, Seq("__negr", key), "__rk_r"),
-        Seq("frequency", key), "__rk_f"),
-      Seq("monetary", key), "__rk_m")
-    // n rows (cheap: `ranked` sits on DenseId's eager snapshot); the
-    // closed-form ntile below needs it as a plan literal
-    val n = ranked.count()
+    // one scan ranks all three metrics: each subject is one row per metric
+    // __m, and the order (__m, metric __m's value, key) puts metric m's
+    // rows at ranks m·n+1 .. m·n+n (the other metrics' fields are null)
+    val metrics = Seq(-col("recency_days"), col("frequency"), col("monetary"))
+    val scan = RangeScan.rank(
+      base.withColumn("__m", explode(array(lit(0), lit(1), lit(2)))),
+      struct(col("__m") +: metrics.zipWithIndex.map { case (v, m) =>
+        when(col("__m") === m, v) } :+ col(key): _*))
+    // the closed-form ntile below needs n as a plan literal
+    val n = scan.total("__one") / 3
     def ntileOf(rk: String): Column = {
       val q = n / 5; val rem = n % 5
       if (rem == 0L) expr(s"CAST($rk DIV ${math.max(q, 1L)} + 1 AS INT)")
@@ -352,10 +352,13 @@ object EventAnalytics {
         s"ELSE $rem + ($rk - ${rem * (q + 1)}) DIV ${math.max(q, 1L)} + 1 " +
         s"END AS INT)")
     }
-    ranked
-      .withColumn("r", ntileOf("__rk_r"))
-      .withColumn("f", ntileOf("__rk_f"))
-      .withColumn("m", ntileOf("__rk_m"))
+    val scores = Seq("r", "f", "m").zipWithIndex.map { case (s, m) =>
+      max(when(col("__m") === m, col("__b"))).as(s) }
+    scan.df
+      .withColumn("__rk", col("__rank") - 1 - col("__m") * n)
+      .withColumn("__b", ntileOf("__rk"))
+      .groupBy(col(key), col("recency_days"), col("frequency"), col("monetary"))
+      .agg(scores.head, scores.tail: _*)
       .withColumn("rfm", concat(col("r"), col("f"), col("m")))
       .select(col(key), col("recency_days"), col("frequency"),
         col("monetary"), col("r"), col("f"), col("m"), col("rfm"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
@@ -116,5 +116,26 @@ object RangeScan {
       acc.withColumn(s"__cum_$s", col(s"__off_$s") + sum(col(s)).over(running))
     }
     Scan(scanned, window, sums, totals)
+  }
+
+  /** A rank is an inclusive running count: [[prefix]] of a constant 1 over
+    * `order`, in the session's `spark.sql.shuffle.partitions` ranges (the
+    * count a column-only `repartitionByRange` uses). `order` must be a total
+    * order; a composite or descending one is a single `struct` key that
+    * spells out where nulls go, e.g. `(v DESC, id)` is
+    * `struct(v.isNull, -v, id)` (and a floating `v` needs `!isnan(v)` after
+    * `v.isNull`: DESC puts NaN first). The frame gains `__rank` (1-based),
+    * `__rows` (n), and `__cum_<s>` / `__tot_<s>` for each `sums` column;
+    * the scan's own columns are dropped (so `window` no longer applies),
+    * and `total("__one")` is n. The snapshot stores every column of `df`:
+    * narrow it first.
+    */
+  def rank(df: DataFrame, order: Column, sums: Seq[String] = Nil): Scan = {
+    val scan = prefix(df.withColumn("__o", order).withColumn("__one", lit(1L)),
+      Nil, "__o", "__one" +: sums,
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    val scratch = Seq("__pid", "__o", "__one", "__next", "__tot___one") ++
+      scan.sums.map("__off_" + _)
+    scan.copy(df = scan.df.withColumnRenamed("__cum___one", "__rank").drop(scratch: _*))
   }
 }

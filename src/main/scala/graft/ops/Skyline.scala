@@ -21,8 +21,10 @@ import org.apache.spark.sql.functions._
   *      exclusive-prefix-min, broadcast back — a point survives iff its y
   *      is strictly below the least of (its partition's exclusive running
   *      min, every earlier partition's min).
-  * The same [[RangeScan.prefix]]/DenseId bounded-barrier contract: the only
-  * collect is ≤#partitions rows.
+  * The same bounded-barrier contract as [[RangeScan.prefix]]: the only
+  * collect is ≤#partitions rows. It stays a scan of its own because it
+  * needs a prefix MIN, not an exact sum: folding it into `prefix` would
+  * make the shared scan branch on its combiner.
   *
   * Output: (x, y, n_rows) ordered by x ascending (y strictly decreasing
   * along the frontier). Maximize an axis by negating it in the caller.

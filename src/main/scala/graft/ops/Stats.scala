@@ -223,17 +223,17 @@ object Stats {
     * G = Σ_i (2i − n − 1)·x_i / (n·Σx), x ascending.
     *
     * The data pass is ONE keyed groupBy (sizes); ranks over the per-group
-    * frame come from [[Ranked.withRankCumSum]]'s range-partition scaffold
-    * (groups scale with data — a global rank window here would be a
-    * single-partition sort of every group row). Integer-exact numerator
-    * via DECIMAL; ties rank deterministically by group key. */
+    * frame come from [[RangeScan.rank]] (groups scale with data — a global
+    * rank window here would be a single-partition sort of every group
+    * row). Integer-exact numerator via DECIMAL; ties rank deterministically
+    * by group key. */
   def giniConcentration(df: DataFrame, group: Column): DataFrame = {
     val sizes = df.select(group.cast("string").as("g"))
       .filter(col("g").isNotNull)
       .groupBy("g").agg(count(lit(1)).as("x"))
-    Ranked.withRankCumSum(sizes, Seq(col("x").asc, col("g").asc), col("x"))
+    RangeScan.rank(sizes, struct(col("x"), col("g"))).df
       .withColumn("i", col("__rank"))
-      .withColumn("n", col("__n"))
+      .withColumn("n", col("__rows"))
       .agg(
         max(col("n")).as("n_groups"),
         sum(col("x")).as("total"),
@@ -908,21 +908,20 @@ object Stats {
     * (decile, n_groups, pop_share, mass_share) rounded 6.
     *
     * One data pass collapses rows to group sizes; ranks and running sums
-    * over the per-group frame come from [[Ranked.withRankCumSum]]'s
-    * range-partition scaffold (groups scale with data — no global
-    * window). */
+    * over the per-group frame come from [[RangeScan.rank]] (groups scale
+    * with data — no global window). */
   def lorenzDeciles(df: DataFrame, group: Column): DataFrame = {
     val sizes = df.filter(group.isNotNull)
       .groupBy(group.as("g")).agg(count(lit(1)).as("sz"))
-    Ranked.withRankCumSum(sizes, Seq(col("sz").asc, col("g").asc), col("sz"))
-      .withColumn("decile", ceil(col("__rank") * 10 / col("__n")).cast("int"))
+    RangeScan.rank(sizes, struct(col("sz"), col("g")), Seq("sz")).df
+      .withColumn("decile", ceil(col("__rank") * 10 / col("__rows")).cast("int"))
       .groupBy("decile")
       .agg(
         count(lit(1)).as("n_groups"),
         round(max(col("__rank")).cast("double") /
-          max(col("__n")).cast("double"), 6).as("pop_share"),
-        round(max(col("__cum")).cast("double") /
-          max(col("__tot")).cast("double"), 6).as("mass_share"))
+          max(col("__rows")).cast("double"), 6).as("pop_share"),
+        round(max(col("__cum_sz")).cast("double") /
+          max(col("__tot_sz")).cast("double"), 6).as("mass_share"))
       .orderBy("decile")
   }
 
@@ -986,8 +985,8 @@ object Stats {
     *
     * The CALLER aggregates data rows to the per-item value table; ranks
     * and prefix sums over that item-catalog-sized frame come from
-    * [[Ranked.withRankCumSum]]'s range-partition scaffold (item catalogs
-    * scale with data — no global window). Value sums are decimal-exact;
+    * [[RangeScan.rank]] (item catalogs scale with data — no global
+    * window). Value sums are decimal-exact;
     * the class boundaries compare the ROUNDED share on both engines, so
     * the A/B/C cut is engine-stable.
     */
@@ -996,10 +995,11 @@ object Stats {
     val base = perItem.select(item.as("item"),
         value.cast("decimal(28,6)").as("v"))
       .filter(col("item").isNotNull && col("v").isNotNull)
-    Ranked.withRankCumSum(base, Seq(col("v").desc, col("item").asc), col("v"))
+    // (v DESC, item): v is non-null here, so -v alone places every row
+    RangeScan.rank(base, struct(-col("v"), col("item")), Seq("v")).df
       .withColumn("rank", col("__rank"))
       .withColumn("cum_share",
-        round(col("__cum").cast("double") / col("__tot").cast("double"), 6))
+        round(col("__cum_v").cast("double") / col("__tot_v").cast("double"), 6))
       .withColumn("abc_class",
         when(col("cum_share") <= aCut, "A")
           .when(col("cum_share") <= bCut, "B")

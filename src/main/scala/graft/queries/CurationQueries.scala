@@ -376,16 +376,16 @@ object CurationQueries extends QueryGroup {
     })
 
   /** Token-balanced serpentine shard assignment (io.Layout.balancedShards:
-    * distributed rank via range-repartition + zipWithIndex, no global
-    * window) plus the deterministic md5 training-shuffle order, pinned
-    * exactly: per-shard doc/token totals and an md5 over the ids in
-    * shuffle order. */
+    * distributed rank via ops.RangeScan.rank, no global window) plus the
+    * deterministic md5 training-shuffle order, pinned exactly: per-shard
+    * doc/token totals and an md5 over the ids in shuffle order. */
   val q91ShardAssign = QueryDef(
     "q91_shard_assign",
     (s, d) => {
       import graft.io.Layout
-      val docs = Tables.documents(s, d).withColumn("w",
-        graft.text.TextAnalysis.tokenCount(col("text")).cast("long"))
+      // (doc_id, w) only: the rank's snapshot stores every column it gets
+      val docs = Tables.documents(s, d).select(col("doc_id"),
+        graft.text.TextAnalysis.tokenCount(col("text")).cast("long").as("w"))
       Layout.balancedShards(docs, "doc_id", "w", 8)
         .groupBy("shard")
         .agg(

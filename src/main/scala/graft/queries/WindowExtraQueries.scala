@@ -138,18 +138,17 @@ object WindowExtraQueries extends QueryGroup {
       FROM v WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
       ORDER BY user_id, version"""))
 
-  /** Dense surrogate-key assignment (ops/DenseId.scala): row_number-over-
+  /** Dense surrogate-key assignment (ops.RangeScan.rank): row_number-over-
     * global-ORDER-BY semantics WITHOUT the single-partition global window —
-    * range partition + local ordinals + broadcast prefix offsets. The
-    * oracle IS the global window (DuckDB can afford it at sf0.01). */
+    * range partitions + per-partition running counts + broadcast prefix
+    * offsets. The oracle IS the global window (DuckDB can afford it at
+    * sf0.01). */
   val q141DenseIds = QueryDef(
     "q141_dense_ids",
-    (s, d) => {
-      import graft.ops.DenseId
-      DenseId.withDenseId(Tables.orders(s, d).select("o_orderkey"),
-          Seq("o_orderkey"))
-        .orderBy("o_orderkey")
-    },
+    (s, d) => graft.ops.RangeScan.rank(Tables.orders(s, d).select("o_orderkey"),
+        col("o_orderkey")).df
+      .select(col("o_orderkey"), (col("__rank") - 1).as("dense_id"))
+      .orderBy("o_orderkey"),
     Some("""SELECT o_orderkey,
         CAST(row_number() OVER (ORDER BY o_orderkey) - 1 AS BIGINT) AS dense_id
       FROM orders ORDER BY o_orderkey"""))

@@ -896,7 +896,8 @@ object DedupOps {
     * b` canonical pair order and the oracle both rely on that total
     * order). A string/non-castable id becomes NULL and its rows drop
     * silently — callers with opaque ids should first mint a surrogate
-    * (e.g. [[graft.ops.DenseId.withDenseId]]) and join names back after. */
+    * (e.g. the `__rank` of [[graft.ops.RangeScan.rank]]) and join names
+    * back after. */
   def prefixFilterJaccardPairs(docs: DataFrame, idCol: String,
       textCol: Column, threshold: Double = 0.5,
       shingle: Int = 3): DataFrame = {

@@ -64,7 +64,7 @@ class AnalyticsSpec extends SparkSpec {
     assert(elapsed < 60.0, f"12-iteration pagerank took $elapsed%.1f s")
   }
 
-  test("pagerank + denseId engage the reliable checkpoint dir when one is configured") {
+  test("pagerank + a rank scan use the reliable checkpoint dir when one is configured") {
     val sc = spark.sparkContext
     val dir = java.nio.file.Files.createTempDirectory("ckpt").toString
     sc.setCheckpointDir(dir)
@@ -80,7 +80,7 @@ class AnalyticsSpec extends SparkSpec {
         .count()
       assert(rddDirs == 1,
         s"expected 1 surviving checkpoint dir (the result's), found $rddDirs")
-      graft.ops.DenseId.withDenseId(Seq(3, 1, 2).toDF("k"), Seq("k")).count()
+      graft.ops.RangeScan.rank(Seq(3, 1, 2).toDF("k"), $"k").df.count()
       val written = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       assert(written > 0, "no reliable checkpoint files were written")
@@ -439,6 +439,27 @@ class AnalyticsSpec extends SparkSpec {
       (4L, 4, 4, 4, "444"), (5L, 5, 5, 5, "555")))
     assert(got.head._4 == 0.0, "non-purchaser must have monetary 0")
     assert(got.map(_._2) == Seq(4L, 3L, 2L, 1L, 0L)) // recency vs day-5 edge
+  }
+
+  test("rfm: scores equal NTILE(5) over (metric, user_id) with ties, a null " +
+      "user and metric orders that disagree") {
+    import org.apache.spark.sql.expressions.Window
+    val rows = (0 until 23).flatMap { i =>
+      val u = if (i == 7) None else Some(i.toLong)
+      (0 to i % 4).map { k =>
+        (u, Timestamp.valueOf(f"2024-01-${1 + i * 5 % 9}%02d 00:0$k%d:00"),
+          if (k == 0 && i % 3 != 0) "purchase" else "view", (i * 7 % 5).toDouble)
+      }
+    }.toDF("user_id", "ts", "event_type", "value")
+    val got = EventAnalytics.rfm(rows, "user_id", "ts", col("value"),
+      col("event_type") === "purchase")
+    def ntile5(c: org.apache.spark.sql.Column) =
+      ntile(5).over(Window.orderBy(c, col("user_id")))
+    val want = got.select(col("user_id"), ntile5(col("recency_days").desc).as("r"),
+        ntile5(col("frequency")).as("f"), ntile5(col("monetary")).as("m"))
+      .orderBy("user_id")
+    assert(got.select("user_id", "r", "f", "m").collect().toSeq == want.collect().toSeq)
+    assert(got.filter(col("user_id").isNull).count() == 1)
   }
 
   test("funnelLatency: first-view to first-later-purchase deltas, exact " +

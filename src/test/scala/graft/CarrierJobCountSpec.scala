@@ -6,7 +6,9 @@ import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
-import graft.ops.{Drift, Stats}
+import graft.io.Layout
+import graft.ops.{Drift, EventAnalytics, Stats}
+import graft.queries.WindowExtraQueries
 
 /** Spark job counts of the prefix-scan carriers: the carrier call (its
   * snapshot and offsets collect run eagerly) plus one `collect()` of its
@@ -48,6 +50,13 @@ class CarrierJobCountSpec extends SparkSpec {
   private lazy val weighted = (1 to 400)
     .map(i => (if (i % 5 == 0) "b" else "a", (i % 61).toDouble, (i % 7 + 1).toDouble))
     .toDF("g", "v", "w")
+  private lazy val groups = (1 to 400).map(i => s"g${i * i % 61}").toDF("g")
+  private lazy val items = (1 to 200).map(i => (s"i$i", BigDecimal(i % 23))).toDF("item", "v")
+  private lazy val events = (1 to 400).map(i => (s"u${i % 71}",
+      java.sql.Timestamp.valueOf(f"2024-01-${i % 28 + 1}%02d 00:00:00"), (i % 13).toDouble,
+      if (i % 3 == 0) "purchase" else "view"))
+    .toDF("user_id", "ts", "value", "event_type")
+  private lazy val docs = (1 to 400).map(i => (i.toLong, (i % 29).toLong)).toDF("doc_id", "w")
 
   // counts at the commit before the carriers shared RangeScan.prefix:
   // ks 10, w1 10, spearman 14, weightedMedian 13 — the shared scan added
@@ -67,5 +76,36 @@ class CarrierJobCountSpec extends SparkSpec {
 
   test("weightedMedian runs 12 Spark jobs") {
     assert(jobsOf(Stats.weightedMedian(weighted, "g", $"v", $"w", partitions = 4)) == 12)
+  }
+
+  // the rank callers, on RangeScan.rank since it replaced the DenseId and
+  // Ranked scaffolds and balancedShards' zipWithIndex; counts before the
+  // move: gini 10, lorenz 12, abc 10, rfm 24, q141 9, balancedShards 3.
+  // rfm's three ranks now share one scan. q141 and balancedShards pay the
+  // scan's window exchange (and balancedShards the range sample, snapshot
+  // and offsets collect) that the per-partition ordinal paths did without.
+  test("giniConcentration runs 10 Spark jobs") {
+    assert(jobsOf(Stats.giniConcentration(groups, $"g")) == 10)
+  }
+
+  test("lorenzDeciles runs 12 Spark jobs") {
+    assert(jobsOf(Stats.lorenzDeciles(groups, $"g")) == 12)
+  }
+
+  test("abcClasses runs 10 Spark jobs") {
+    assert(jobsOf(Stats.abcClasses(items, $"item", $"v")) == 10)
+  }
+
+  test("rfm runs 15 Spark jobs") {
+    assert(jobsOf(EventAnalytics.rfm(events, "user_id", "ts", $"value",
+      $"event_type" === "purchase")) == 15)
+  }
+
+  test("q141 dense ids run 11 Spark jobs") {
+    assert(jobsOf(WindowExtraQueries.q141DenseIds.fn(spark, sf001)) == 11)
+  }
+
+  test("balancedShards runs 8 Spark jobs") {
+    assert(jobsOf(Layout.balancedShards(docs, "doc_id", "w", 8)) == 8)
   }
 }

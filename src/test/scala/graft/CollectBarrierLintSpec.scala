@@ -17,12 +17,10 @@ class CollectBarrierLintSpec extends AnyFunSuite {
     * The comment states each site's bound. */
   private val audited: Map[String, Int] = Map(
     "ops/Merge.scala" -> 1,        // touched-partition values (≤#partitions)
-    "ops/DenseId.scala" -> 1,      // per-partition counts (≤#partitions)
     "ops/MissingData.scala" -> 1,  // per-column null fractions (≤#columns)
     "ops/Skyline.scala" -> 1,      // per-partition y-minima (≤#partitions)
     "ops/Drift.scala" -> 1,        // jsdPairs' group list (≤#groups)
     "ops/RangeScan.scala" -> 1,    // per-(pid, key) prefix totals (≤partitions·#keys)
-    "ops/Ranked.scala" -> 1,       // per-partition count+sum (≤#partitions)
     "text/Curation.scala" -> 1,    // per-source sampling rates (≤#sources)
     "text/Retrieval.scala" -> 1,   // query-term df row (≤#query terms)
     "text/Bpe.scala" -> 2,         // learned merge table (≤#merges per round)

@@ -28,8 +28,8 @@ class FleetWindowGuardSpec extends SparkSpec {
     * frame the window runs over — the reviewable claim that its row count
     * does not scale with data volume. Data-sized frames (per-user,
     * per-item, per-doc) are NOT acceptable here: q202's RFM, q167's gini,
-    * q200's lorenz and q210's ABC all moved to the DenseId/Ranked
-    * range-partition scaffolds instead of being whitelisted. */
+    * q200's lorenz and q210's ABC all rank through RangeScan.rank's
+    * range-partitioned prefix scan instead of being whitelisted. */
   private val allowedGlobalWindows: Map[String, String] = Map(
     "q03_value_counts_pct" -> "≤5 o_orderpriority category values",
     "q107_vocab_coverage" -> "top-k=20 rows post-limit",

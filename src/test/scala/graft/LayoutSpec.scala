@@ -31,6 +31,20 @@ class LayoutSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("balancedShards: null, NaN and tied weights deal in (weight DESC, id) order") {
+    // (weight DESC, id): NaN first, nulls last, ties and 0.0 = -0.0 by id
+    val ws = Seq(Some(5.0), Some(Double.NaN), Some(5.0), Some(2.0), None,
+      Some(0.0), Some(5.0), None, Some(2.0), Some(0.0), Some(7.0), Some(5.0),
+      Some(9.0), None, Some(5.0), None, Some(-0.0), Some(Double.NaN),
+      Some(2.0), Some(-3.5))
+    val docs = ws.zipWithIndex.map { case (w, i) => (i.toLong, w) }
+      .toDF("doc_id", "w").repartition(3)
+    val got = Layout.balancedShards(docs, "doc_id", "w", 3)
+      .select("doc_id", "shard").as[(Long, Int)].collect().sortBy(_._1).map(_._2)
+    // the assignment the range-repartition + zipWithIndex rank produced
+    assert(got.toSeq == Seq(1, 0, 0, 2, 1, 0, 0, 0, 1, 1, 2, 1, 2, 0, 2, 1, 2, 1, 0, 2))
+  }
+
   test("hashShards: pure projection, deterministic, count-balanced in expectation") {
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     val sharded = Layout.hashShards(docs, "doc_id", 8)

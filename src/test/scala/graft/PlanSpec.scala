@@ -192,10 +192,16 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q91: balanced shards rank via range partition — no global window") {
-    val p = planOf(graft.queries.CurationQueries.q91ShardAssign.fn(spark, sf001))
+    val df = graft.queries.CurationQueries.q91ShardAssign.fn(spark, sf001)
+    val p = planOf(df)
     assert(p.contains("rangepartitioning") || p.contains("RangePartitioning"),
       "expected a distributed range repartition for the global rank")
-    assert(!p.contains("Window"), "global rank must not use a window")
+    // the rank's running count is a window per range partition (__pid)
+    val windows = df.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }
+    assert(windows.forall(_.partitionSpec.map(_.sql).exists(_.contains("__pid"))),
+      s"global rank must not use an unpartitioned window:\n$p")
   }
 
   test("q93: HTML extraction is a pure projection — no shuffle before the sort") {

@@ -314,18 +314,17 @@ class RelationalOpsSpec extends SparkSpec {
       .collect().toSeq == Seq(None, Some("x")))
   }
 
-  // ---- DenseId ----
+  // ---- dense ids (RangeScan.rank) ----
 
   test("dense ids are 0..n-1 in key order, across multiple range partitions") {
-    import graft.ops.DenseId
     val df = (0 until 997).map(i => (i * 7) % 997).toDF("k").repartition(8)
-    val got = DenseId.withDenseId(df, Seq("k")).orderBy("k")
-      .as[(Int, Long)].collect().toSeq
+    def denseIds = graft.ops.RangeScan.rank(df, $"k").df
+      .select($"k", ($"__rank" - 1).as("dense_id"))
+    val got = denseIds.orderBy("k").as[(Int, Long)].collect().toSeq
     assert(got.map(_._2) == (0L until 997L)) // dense, no gaps, no dupes
     assert(got.map(_._1) == got.map(_._1).sorted) // id order = key order
     // and the plan must NOT contain a single-partition global sort
-    val plan = DenseId.withDenseId(df, Seq("k"))
-      .queryExecution.executedPlan.toString()
+    val plan = denseIds.queryExecution.executedPlan.toString()
     assert(!plan.contains("SinglePartition"), "global window leaked in")
   }
 

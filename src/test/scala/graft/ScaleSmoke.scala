@@ -223,8 +223,8 @@ object ScaleSmoke {
         col("text"), threshold = 0.3, shingle = 3)
     }
     time("ranked-cumsum-10M-rows-1M-groups") {
-      // the Ranked scaffold (gini/lorenz/ABC ranks) over a 1M-group
-      // frame: range shuffle + partitioned windows, no global sort task
+      // RangeScan.rank (gini/lorenz/ABC ranks) over a 1M-group frame:
+      // range shuffle + partitioned windows, no global sort task
       graft.ops.Stats.lorenzDeciles(
         spark.range(10000000L).select((col("id") % 1000000).as("g")),
         col("g"))

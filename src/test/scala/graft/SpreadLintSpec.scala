@@ -34,9 +34,10 @@ class SpreadLintSpec extends AnyFunSuite {
     "ops/Drift.scala" -> (4,
       "guarded: vocabJaccardPairs/jsdPairs token explodes spread; " +
         "exempt: contractReport/psiMultiReport stack x#columns (bounded)"),
-    "ops/EventAnalytics.scala" -> (2,
+    "ops/EventAnalytics.scala" -> (3,
       "exempt: resampleFfill grid is post-aggregate per key with its own " +
-        "maxCellsPerKey raise; funnel counts explode a 1-row aggregate"),
+        "maxCellsPerKey raise; funnel counts explode a 1-row aggregate; " +
+        "rfm's x3 metric stack reads the per-subject aggregate"),
     "ops/Stats.scala" -> (7,
       "guarded: both bootstrap resample explodes (x b per row) spread; " +
         "exempt: x#features / x#pairs / x#terms / x maxLag stacking " +

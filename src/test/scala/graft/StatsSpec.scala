@@ -937,14 +937,13 @@ class StatsSpec extends SparkSpec {
       s"olsByGroup must be one map-side-combined aggregate:\n$plan")
   }
 
-  test("Ranked.withRankCumSum: exact ranks and running sums in asc and " +
+  test("RangeScan.rank: exact ranks and running sums in asc and " +
       "desc orders, invariant to input partitioning") {
     val rows = Seq(("a", 3L), ("b", 1L), ("c", 1L), ("d", 7L), ("e", 2L))
     def run(df: org.apache.spark.sql.DataFrame, desc: Boolean) = {
-      val ord = if (desc) Seq($"v".desc, $"k".asc) else Seq($"v".asc, $"k".asc)
-      graft.ops.Ranked.withRankCumSum(df, ord, $"v")
-        .select($"k", $"__rank", $"__cum".cast("long"), $"__n",
-          $"__tot".cast("long"))
+      val ord = if (desc) struct(-$"v", $"k") else struct($"v", $"k")
+      graft.ops.RangeScan.rank(df, ord, Seq("v")).df
+        .select($"k", $"__rank", $"__cum_v", $"__rows", $"__tot_v")
         .as[(String, Long, Long, Long, Long)].collect().toSeq.sortBy(_._2)
     }
     val asc = run(rows.toDF("k", "v"), desc = false)
