@@ -26,14 +26,11 @@ object ExportCsv {
     properties.select(cols: _*)
   }
 
-  /** Write as a single headered CSV (the reference writes one file; at scale
-    * drop the coalesce and write a directory).
+  /** Write as a single headered CSV at a new `path` (the reference writes
+    * one file); [[graft.jobs.ExportJob]] commits it with [[Commit.overwrite]].
     */
-  def write(properties: DataFrame, path: String, singleFile: Boolean = true): Unit = {
-    val out = toExport(properties)
-    val df = if (singleFile) out.coalesce(1) else out
-    df.write.mode("overwrite").option("header", "true").csv(path)
-  }
+  def write(properties: DataFrame, path: String): Unit =
+    toExport(properties).coalesce(1).write.option("header", "true").csv(path)
 
   /** S7: read an export CSV with pandas-style inference. */
   def read(spark: SparkSession, path: String): DataFrame =

@@ -87,8 +87,13 @@ object ScrapeJob {
     val parsed = ScrapeParse.parseScrapedPages(pages)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val okRows = parsed.filter(col("ok")).drop("ok", "url")
+      // id is the natural key link_id, the store's INSERT-OR-IGNORE key:
+      // unique and stable under replay, so the store carries all of
+      // Schemas.properties' columns and ExportJob can read it
+      val okRows = parsed.filter(col("ok"))
+        .withColumn("id", col("link_id"))
         .withColumn("scraped_at", lit(now))
+        .select(graft.schema.Schemas.properties.fieldNames.map(col): _*)
       Commit.append(spark, okRows, propertiesDir, "link_id")
       val links2 = LinkState.applyScrapeResults(
         links1, parsed.select("url", "ok"), now)
@@ -103,26 +108,16 @@ object ScrapeJob {
   /** Side-effecting I/O belongs in mapPartitions, not a per-row UDF
     * (SURVEY §2.10): the fetcher deserializes ONCE PER PARTITION, so an
     * implementation holding a keep-alive HTTP client gets connection reuse
-    * across the partition's URLs, and the partition is a natural rate-limit
-    * scope — each of the 20 partitions fetches sequentially with an optional
-    * minimum interval, mirroring the reference's 20-worker pool
-    * (scraper.py:327) with one in-flight request per worker.
+    * across the partition's URLs — each of the 20 partitions fetches
+    * sequentially, mirroring the reference's 20-worker pool (scraper.py:327)
+    * with one in-flight request per worker.
     */
-  private[jobs] def fetchPages(pending: DataFrame, fetcher: Sitemap.Fetcher,
-      minIntervalMs: Long = 0L): DataFrame = {
+  private[jobs] def fetchPages(pending: DataFrame, fetcher: Sitemap.Fetcher): DataFrame = {
     val spark = pending.sparkSession
     import spark.implicits._
-    pending.select("url").as[String].mapPartitions { urls =>
-      var lastAt = 0L
-      urls.map { u =>
-        if (minIntervalMs > 0) {
-          val wait = lastAt + minIntervalMs - System.currentTimeMillis()
-          if (wait > 0) Thread.sleep(wait)
-          lastAt = System.currentTimeMillis()
-        }
-        (u, fetcher.fetch(u))
-      }
-    }.toDF("url", "html")
+    pending.select("url").as[String]
+      .mapPartitions(_.map(u => (u, fetcher.fetch(u))))
+      .toDF("url", "html")
   }
 }
 
@@ -168,7 +163,7 @@ object ExportJob {
   }
 
   def run(spark: SparkSession, propertiesDir: String, csvOut: String): Unit =
-    ExportCsv.write(spark.read.parquet(propertiesDir), csvOut)
+    Commit.overwrite(spark, csvOut)(ExportCsv.write(spark.read.parquet(propertiesDir), _))
 }
 
 /** Task 3 — preprocess: export CSV → cleaned/enriched/encoded parquet+csv.
@@ -182,6 +177,7 @@ object PreprocessJob {
   }
 
   def run(spark: SparkSession, csvIn: String, cacheDir: String, outDir: String): Unit = {
+    require(Commit.exists(spark, csvIn), s"no export at $csvIn")
     val export = ExportCsv.read(spark, csvIn)
     val cache =
       if (Commit.exists(spark, cacheDir)) spark.read.parquet(cacheDir)

@@ -314,11 +314,13 @@ object EventAnalytics {
     * ntile of (rank, n): the first n mod 5 buckets take ceil(n/5) rows,
     * the rest floor(n/5) — bit-identical to NTILE(5) in both engines.
     * Recency's DESC order rides the same ascending scan on the negated
-    * value. Scale shape: one map-side-combined groupBy collapses events to
-    * the per-subject table; one range-repartition of that table stacked
-    * ×3, one row per metric (a distributed sort + ≤#partitions driver
-    * offset barrier); one keyed groupBy puts each subject's three scores
-    * back on one row; the stream-edge max is a 1-row broadcast.
+    * value. A null subject key breaks ties last (NULLS LAST, the oracle's
+    * default order), in the rank and in the output. Scale shape: one
+    * map-side-combined groupBy collapses events to the per-subject table;
+    * one range-repartition of that table stacked ×3, one row per metric
+    * (a distributed sort + ≤#partitions driver offset barrier); one keyed
+    * groupBy puts each subject's three scores back on one row; the
+    * stream-edge max is a 1-row broadcast.
     */
   def rfm(df: DataFrame, key: String, ts: String, value: Column,
       monetaryWhen: Column): DataFrame = {
@@ -335,13 +337,14 @@ object EventAnalytics {
       .withColumn("recency_days",
         expr("(__gmax_us - __last_us) DIV 86400000000"))
     // one scan ranks all three metrics: each subject is one row per metric
-    // __m, and the order (__m, metric __m's value, key) puts metric m's
-    // rows at ranks m·n+1 .. m·n+n (the other metrics' fields are null)
+    // __m, and the order (__m, metric __m's value, key nulls last) puts
+    // metric m's rows at ranks m·n+1 .. m·n+n (the other metrics' fields
+    // are null)
     val metrics = Seq(-col("recency_days"), col("frequency"), col("monetary"))
     val scan = RangeScan.rank(
       base.withColumn("__m", explode(array(lit(0), lit(1), lit(2)))),
       struct(col("__m") +: metrics.zipWithIndex.map { case (v, m) =>
-        when(col("__m") === m, v) } :+ col(key): _*))
+        when(col("__m") === m, v) } :+ col(key).isNull :+ col(key): _*))
     // the closed-form ntile below needs n as a plan literal
     val n = scan.total("__one") / 3
     def ntileOf(rk: String): Column = {
@@ -362,7 +365,7 @@ object EventAnalytics {
       .withColumn("rfm", concat(col("r"), col("f"), col("m")))
       .select(col(key), col("recency_days"), col("frequency"),
         col("monetary"), col("r"), col("f"), col("m"), col("rfm"))
-      .orderBy(key)
+      .orderBy(col(key).asc_nulls_last)
   }
 
   /** Funnel conversion latency: subjects whose first `fromStep` is later

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.obs.JobLog
+
 /** PERSISTABLE exact-substring decontamination index — the build-once /
   * probe-many form of [[DedupOps.exactSubstrContamSpans]].
   *
@@ -126,8 +128,7 @@ object ExactSubstrIndex {
       sub: Int = 24, buckets: Int = 64): Unit = {
     val spark = train.sparkSession
     import spark.implicits._
-    spark.sparkContext.setJobDescription(s"xsub: build grams -> $dir")
-    try {
+    JobLog.phase(spark.sparkContext, s"xsub: build grams -> $dir") {
       // ~128 MB files, clamped to [1, 4096] per bucket
       val filesPerBucket = math.max(1L, math.min(4096L,
         gramBytes(train, sub) / (128L << 20) / buckets)).toInt
@@ -146,7 +147,7 @@ object ExactSubstrIndex {
       rel.write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/grams")
       Seq((sub, buckets, HashVer)).toDF("sub", "buckets", "hash")
         .write.mode("overwrite").parquet(s"$dir/meta")
-    } finally spark.sparkContext.setJobDescription(null)
+    }
   }
 
   def loadMeta(spark: SparkSession, dir: String): Meta = {
@@ -179,8 +180,7 @@ object ExactSubstrIndex {
       textCol: Column): Long = {
     val meta = loadMeta(spark, dir)
     val existing = loadGrams(spark, dir)
-    spark.sparkContext.setJobDescription(s"xsub: add batch -> $dir")
-    try {
+    JobLog.phase(spark.sparkContext, s"xsub: add batch -> $dir") {
       // r14: the novelty anti join keys on (h, g) instead of g alone —
       // h = gramHash64(g) on BOTH sides, so the join relation is unchanged
       // (h equality is implied by g equality), but the sort-merge now
@@ -200,7 +200,7 @@ object ExactSubstrIndex {
         .write.mode("append").partitionBy("bucket").parquet(s"$dir/grams")
       fresh.unpersist(blocking = false)
       n
-    } finally spark.sparkContext.setJobDescription(null)
+    }
   }
 
   /** Probe a saved index with an eval corpus: maximal contamination spans

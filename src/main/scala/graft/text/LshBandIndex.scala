@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.obs.JobLog
+
 /** PERSISTABLE MinHash/LSH band index with incremental add — the fuzzy
   * sibling of [[DedupOps.incrementalExactDedup]] (exact keys) and the
   * IVF-PQ add path ([[graft.sim.Pq.appendToSavedIvfPqIndex]]) on the dedup
@@ -72,8 +74,7 @@ object LshBandIndex {
       n: Int = 2, bandsOf: Int = 2, buckets: Int = 16): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    spark.sparkContext.setJobDescription(s"lshidx: build bands -> $dir")
-    try {
+    JobLog.phase(spark.sparkContext, s"lshidx: build bands -> $dir") {
       // r14 (guide §6, the ExactSubstrIndex.build layout rationale): align
       // write tasks to (band_id, bucket) dirs — without it every
       // post-shuffle task holds rows of ~every dir and the dynamic writer
@@ -96,7 +97,7 @@ object LshBandIndex {
         .parquet(s"$dir/bands")
       Seq((n, bandsOf, buckets)).toDF("n", "bandsOf", "buckets")
         .write.mode("overwrite").parquet(s"$dir/meta")
-    } finally spark.sparkContext.setJobDescription(null)
+    }
   }
 
   def loadMeta(spark: SparkSession, dir: String): Meta = {

@@ -453,11 +453,14 @@ class AnalyticsSpec extends SparkSpec {
     }.toDF("user_id", "ts", "event_type", "value")
     val got = EventAnalytics.rfm(rows, "user_id", "ts", col("value"),
       col("event_type") === "purchase")
+    // ties and the output order put the null user last, as the q202
+    // oracle's default NULLS LAST does
+    val user = col("user_id").asc_nulls_last
     def ntile5(c: org.apache.spark.sql.Column) =
-      ntile(5).over(Window.orderBy(c, col("user_id")))
+      ntile(5).over(Window.orderBy(c, user))
     val want = got.select(col("user_id"), ntile5(col("recency_days").desc).as("r"),
         ntile5(col("frequency")).as("f"), ntile5(col("monetary")).as("m"))
-      .orderBy("user_id")
+      .orderBy(user)
     assert(got.select("user_id", "r", "f", "m").collect().toSeq == want.collect().toSeq)
     assert(got.filter(col("user_id").isNull).count() == 1)
   }

@@ -1,12 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.io.Layout
+import graft.obs.JobLog
 import graft.ops.{Drift, EventAnalytics, Stats}
 import graft.queries.WindowExtraQueries
 
@@ -15,33 +12,13 @@ import graft.queries.WindowExtraQueries
   * result, on a fixed fixture. The counts pin the number of barriers each
   * carrier pays, so a change to the shared scan that adds one fails here —
   * and they are the baseline a scan that folds its range sampling into the
-  * snapshot has to beat. Jobs are attributed by job group, so jobs of other
-  * threads never count.
+  * snapshot has to beat. Jobs are recorded by [[JobLog.during]], so jobs of
+  * other threads never count.
   */
 class CarrierJobCountSpec extends SparkSpec {
   import spark.implicits._
 
-  private def jobsOf(body: => DataFrame): Int = {
-    val sc = spark.sparkContext
-    val group = s"carrier-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "carrier job count")
-    try {
-      body.collect()
-      TestListenerBus.drain(sc)
-      jobs.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsOf(body: => DataFrame): Int = JobLog.during(spark)(body.collect())._2.size
 
   private lazy val xs = (1 to 400).map(i => (i % 97).toDouble).toDF("v")
   private lazy val ys = (1 to 300).map(i => (i % 53).toDouble + 0.5).toDF("v")

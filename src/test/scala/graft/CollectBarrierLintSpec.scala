@@ -40,25 +40,8 @@ class CollectBarrierLintSpec extends AnyFunSuite {
 
   test("every .collect() in src/main is in the audited bounded-barrier " +
       "census; counts match exactly") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val it = java.nio.file.Files.walk(root)
-    val found: Map[String, Int] =
-      try {
-        import scala.jdk.CollectionConverters._
-        it.iterator().asScala
-          .filter(p => p.toString.endsWith(".scala"))
-          .map { p =>
-            val rel = root.relativize(p).toString
-            val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-            // literal match (not regex: the dots/parens would also match
-            // collect_list / collect_set aggregate calls)
-            val n = java.util.regex.Pattern.quote(".collect()").r
-              .findAllIn(txt).size
-            rel -> n
-          }
-          .filter(_._2 > 0)
-          .toMap
-      } finally it.close()
+    // literal: never collect_list / collect_set aggregate calls
+    val found = SourceScan.count(".collect()")
     val unaudited = found.toSeq.filter { case (f, n) => audited.get(f) != Some(n) }
     assert(unaudited.isEmpty,
       "collect() sites outside the audited census (audit the bound, then " +

@@ -1,23 +1,14 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.io.Commit]] is the one module under src/main that knows the
   * on-disk commit policy (the [[SessionFactorySpec]] source-scan idea). */
 class CommitLintSpec extends AnyFunSuite {
 
-  private val root = java.nio.file.Paths.get("src/main/scala/graft")
-
   /** The files under src/main/scala/graft, relative to it, that contain `needle`. */
-  private def filesWith(needle: String): List[String] = {
-    val walk = java.nio.file.Files.walk(root)
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-      .filter(p => java.nio.file.Files.readString(p).contains(needle))
-      .map(root.relativize(_).toString).toList.sorted
-    finally walk.close()
-  }
+  private def filesWith(needle: String): List[String] =
+    SourceScan.filesWhere("src/main/scala/graft")(_.contains(needle))
 
   test("only io/Commit.scala and IndexCache's content-addressed publish rename") {
     assert(filesWith(".rename(") == List("io/Commit.scala", "queries/IndexCache.scala"))

@@ -57,13 +57,15 @@ class DomainSpec extends SparkSpec {
   }
 
   test("export csv roundtrip: NULL literal reads back as null") {
-    val dir = java.nio.file.Files.createTempDirectory("exp").toString + "/csv"
+    val base = java.nio.file.Files.createTempDirectory("exp").toString
+    val dir = s"$base/csv"
     val props = Seq((1L, "9000")).toDF("id", "postal_code")
     val sources = Schemas.exportHeader.flatMap(_._2).distinct
     val full = sources.foldLeft(props) { (acc, c) =>
       if (acc.columns.contains(c)) acc else acc.withColumn(c, lit(null).cast("string"))
     }
-    ExportCsv.write(full, dir)
+    full.write.parquet(s"$base/properties")
+    graft.jobs.ExportJob.run(spark, s"$base/properties", dir)
     val back = ExportCsv.read(spark, dir)
     assert(back.count() == 1)
     assert(back.select("Price").head().isNullAt(0))

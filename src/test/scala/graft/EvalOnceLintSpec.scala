@@ -59,21 +59,7 @@ class EvalOnceLintSpec extends SparkSpec {
     (4L, "margaret"), (5L, "margarett")).toDF("id", "name")
 
   test("every functions.EvalOnce( site in src/main is in the audited census") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val it = java.nio.file.Files.walk(root)
-    val found: Map[String, Int] =
-      try {
-        import scala.jdk.CollectionConverters._
-        it.iterator().asScala
-          .filter(p => p.toString.endsWith(".scala"))
-          .map { p =>
-            val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-            root.relativize(p).toString ->
-              java.util.regex.Pattern.quote("functions.EvalOnce(").r.findAllIn(txt).size
-          }
-          .filter(_._2 > 0)
-          .toMap
-      } finally it.close()
+    val found = SourceScan.count("functions.EvalOnce(")
     assert(found == audited, s"EvalOnce sites $found vs audited $audited: plan-check " +
       "the new operator below, then update EvalOnceLintSpec")
   }

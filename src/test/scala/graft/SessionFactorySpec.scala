@@ -6,14 +6,8 @@ package graft
 class SessionFactorySpec extends SparkSpec {
 
   test("the session builder is called in one file under src/: Jobs.scala") {
-    import scala.jdk.CollectionConverters._
     val needle = "SparkSession" + ".builder" // split: this file must not match
-    val src = java.nio.file.Paths.get("src")
-    val files = java.nio.file.Files.walk(src)
-    val hits = try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .filter(p => java.nio.file.Files.readString(p).contains(needle))
-        .map(src.relativize(_).toString).toList
-      finally files.close()
+    val hits = SourceScan.filesWhere("src")(_.contains(needle))
     assert(hits == List("main/scala/graft/jobs/Jobs.scala"),
       s"session builder outside the factory (build through JobSession.build): $hits")
   }

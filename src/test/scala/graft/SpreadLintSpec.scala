@@ -45,9 +45,6 @@ class SpreadLintSpec extends AnyFunSuite {
         "explode reads the already-spread frame"),
     "ops/Skew.scala" -> (1,
       "exempt: deliberate bounded salt replication of the SMALL side"),
-    "tools/OptProbe.scala" -> (1,
-      "exempt: dev phase-timing main, not a library path — mirrors the " +
-        "PPJoin tok explode it measures (which is itself in this census)"),
     "queries/AnalyticsQueries.scala" -> (1,
       "exempt: 7-day sequence per aggregated week row"),
     "queries/CurationQueries.scala" -> (1,
@@ -96,23 +93,7 @@ class SpreadLintSpec extends AnyFunSuite {
 
   test("every explode()/posexplode() file in src/main is in the audited " +
       "spread census; counts match exactly") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val it = java.nio.file.Files.walk(root)
-    val found: Map[String, Int] =
-      try {
-        import scala.jdk.CollectionConverters._
-        it.iterator().asScala
-          .filter(p => p.toString.endsWith(".scala"))
-          .map { p =>
-            val rel = root.relativize(p).toString
-            val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-            val n = java.util.regex.Pattern.quote("explode(").r
-              .findAllIn(txt).size
-            rel -> n
-          }
-          .filter(_._2 > 0)
-          .toMap
-      } finally it.close()
+    val found = SourceScan.count("explode(")
     val unaudited = found.toSeq
       .filter { case (f, n) => audited.get(f).map(_._1) != Some(n) }
       .sortBy(_._1)
@@ -126,11 +107,8 @@ class SpreadLintSpec extends AnyFunSuite {
     val claimsGuard = audited.collect {
       case (f, (_, note)) if note.startsWith("guarded") => f
     }
-    val missingGuard = claimsGuard.filterNot { f =>
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        root.resolve(f)), "UTF-8")
-      txt.contains("Spread.for")
-    }
+    val sources = SourceScan()
+    val missingGuard = claimsGuard.filterNot(f => sources(f).contains("Spread.for"))
     assert(missingGuard.isEmpty,
       s"audited as guarded but no Spread call present: $missingGuard")
   }

@@ -16,16 +16,7 @@ class CommitSpec extends SparkSpec {
   private def children(dir: String): Seq[String] =
     new java.io.File(dir).list().toSeq.sorted
 
-  /** Every file under `dir`, by relative path, with the SHA-256 of its bytes. */
-  private def files(dir: String): Map[String, String] = {
-    val root = java.nio.file.Paths.get(dir)
-    val walk = java.nio.file.Files.walk(root)
-    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-      .map(p => root.relativize(p).toString ->
-        java.util.HexFormat.of().formatHex(java.security.MessageDigest
-          .getInstance("SHA-256").digest(java.nio.file.Files.readAllBytes(p)))).toMap
-    finally walk.close()
-  }
+  import CommitSpec.files
 
   test("a dir given with a trailing slash stages beside itself: overwrite, " +
       "append and mergePartitioned") {
@@ -65,5 +56,18 @@ class CommitSpec extends SparkSpec {
     assert(Commit.exists(spark, dir))
     assert(files(dir) == before)
     assert(spark.read.parquet(dir).as[Int].collect().toSeq.sorted == Seq(1, 2, 3))
+  }
+}
+
+object CommitSpec {
+  /** Every file under `dir`, by relative path, with the SHA-256 of its bytes. */
+  def files(dir: String): Map[String, String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString ->
+        java.util.HexFormat.of().formatHex(java.security.MessageDigest
+          .getInstance("SHA-256").digest(java.nio.file.Files.readAllBytes(p)))).toMap
+    finally walk.close()
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.io.Commit
+import graft.io.CommitSpec.files
 
 class JobsSpec extends SparkSpec {
   import spark.implicits._
@@ -25,15 +26,6 @@ class JobsSpec extends SparkSpec {
     Commit.append(spark, b, dir, "link_id")
     assert(spark.read.parquet(dir).count() == 3)
     assert(files(dir) == before)
-  }
-
-  /** Every file under `dir`, by name, with the SHA-256 of its bytes. */
-  private def files(dir: String): Map[String, String] = {
-    val ds = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    try ds.iterator().asScala.map(p => p.getFileName.toString ->
-      java.util.HexFormat.of().formatHex(java.security.MessageDigest
-        .getInstance("SHA-256").digest(java.nio.file.Files.readAllBytes(p)))).toMap
-    finally ds.close()
   }
 
   private def table(dir: String): Seq[(Long, String)] =
@@ -156,67 +148,64 @@ class JobsSpec extends SparkSpec {
     assert(spark.read.parquet(dir).as[Int].collect().toSeq == Seq(4))
   }
 
+  private def subUrl(k: Int) = s"https://x.be/sitemap-classified-$k.xml"
+  private def listingUrl(i: Int) =
+    s"https://www.immoweb.be/en/classified/house/for-sale/gent/9000/${20000000 + i}"
+
+  /** Listing i's URL and page: a house whose price follows its living area,
+    * at an address no other listing has. `valid = false` leaves EPC and kWh
+    * null, which the scrape's validation rejects. */
+  private def listing(i: Int, valid: Boolean = true): (String, String) = {
+    val area = 80 + 7 * i
+    val (epc, kwh) = if (valid) (s""""${Seq("A", "B", "C", "D")(i % 4)}"""", s"${150 + i}")
+      else ("null", "null")
+    listingUrl(i) -> s"""<html><script>window.classified = {"property":{"type":"HOUSE",
+      "subtype":"VILLA","bedroomCount":${2 + i % 4},"netHabitableSurface":$area,
+      "fireplaceExists":${i % 2 == 0},"hasSwimmingPool":false,"hasTerrace":true,
+      "terraceSurface":${10 + i},"hasGarden":true,"gardenSurface":${50 + i},
+      "location":{"locality":"Gent","postalCode":"9000","street":"Straat $i",
+        "number":"$i","latitude":${51.0 + i * 0.001},"longitude":${3.7 + i * 0.001}},
+      "kitchen":{"type":"INSTALLED"},"building":{"facadeCount":${2 + i % 3},
+        "condition":"${Seq("GOOD", "AS_NEW", "TO_RESTORE", "JUST_RENOVATED")(i % 4)}",
+        "constructionYear":${1950 + i}},"land":{"surface":${200 + 13 * i}}},
+      "transaction":{"sale":{"price":${2000 * area + (i % 5) * 3000}},
+        "certificates":{"epcScore":$epc,"primaryEnergyConsumptionPerSqm":$kwh}}};
+      </script></html>"""
+  }
+
+  /** A canned site: the sitemap index over `subs`, and every body a scrape
+    * fetches, by URL: each sub-sitemap, listing its pages, and each page. */
+  private def site(subs: Seq[(String, Seq[(String, String)])]): (String, Map[String, String]) = {
+    val index = subs.map(s => s"<sitemap><loc>${s._1}</loc></sitemap>")
+      .mkString("<sitemapindex>", "", "</sitemapindex>")
+    val sitemaps = subs.map { case (sub, pages) => sub -> pages.map(p =>
+      s"""<url><xhtml:link rel="alternate" hreflang="en-BE" href="${p._1}"/></url>""")
+      .mkString("<urlset>", "", "</urlset>") }
+    (index, (sitemaps ++ subs.flatMap(_._2)).toMap)
+  }
+
   test("ScrapeJob.run end-to-end: snapshot -> scrape -> properties + link statuses") {
     val base = java.nio.file.Files.createTempDirectory("scrape").toString
     val (linksDir, propsDir) = (s"$base/links", s"$base/properties")
-    val u1 = "https://www.immoweb.be/en/classified/house/for-sale/gent/9000/11111111"
-    val u2 = "https://www.immoweb.be/en/classified/apartment/for-sale/luik/4000/22222222"
-    val index = """<sitemapindex>
-      <sitemap><loc>https://x.be/sitemap-classified-1.xml</loc></sitemap>
-      </sitemapindex>"""
-    val sub = s"""<urlset>
-      <url><xhtml:link rel="alternate" hreflang="en-BE" href="$u1"/></url>
-      <url><xhtml:link rel="alternate" hreflang="en-BE" href="$u2"/></url>
-      </urlset>"""
-    def page(epc: String, kwh: String) = s"""<html><script>
-      window.classified = {"property":{"type":"HOUSE","subtype":"VILLA",
-        "location":{"locality":"Gent","postalCode":"9000","latitude":51.0,"longitude":3.7}},
-      "transaction":{"sale":{"price":300000},
-        "certificates":{"epcScore":$epc,"primaryEnergyConsumptionPerSqm":$kwh}}};
-      </script></html>"""
-    // locals only (a def would capture the non-serializable spec instance)
-    val goodPage = page("\"B\"", "250")
-    val badPage = page("null", "null") // both null -> validation reject -> error
-    val subLocal = sub
-    val u1Local = u1
-    val fetcher = new graft.ingest.Sitemap.Fetcher {
-      def fetch(url: String): String =
-        if (url.endsWith(".xml")) subLocal
-        else if (url == u1Local) goodPage
-        else badPage
-    }
+    val (index, bodies) = site(Seq(subUrl(1) -> Seq(listing(1), listing(2, valid = false))))
     val now = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
-    ScrapeJob.run(spark, linksDir, propsDir, index, fetcher, now)
+    ScrapeJob.run(spark, linksDir, propsDir, index, new UrlCountingFetcher(bodies), now)
     val links = spark.read.parquet(linksDir)
     val st = links.select("url", "status").as[(String, String)].collect().toMap
-    assert(st(u1) == "scraped" && st(u2) == "error")
+    assert(st(listingUrl(1)) == "scraped" && st(listingUrl(2)) == "error")
     val props = spark.read.parquet(propsDir)
     assert(props.count() == 1)
     val row = props.head()
-    assert(row.getAs[Long]("link_id") == 11111111L)
+    assert(row.getAs[Long]("link_id") == 20000001L)
     assert(row.getAs[String]("epc") == "B")
     // re-run with the same snapshot: idempotent (no property dup, statuses keep)
-    ScrapeJob.run(spark, linksDir, propsDir, index, fetcher, now)
+    ScrapeJob.run(spark, linksDir, propsDir, index, new UrlCountingFetcher(bodies), now)
     assert(spark.read.parquet(propsDir).count() == 1)
   }
 
   test("ScrapeJob.run fetches each sub-sitemap and each pending page exactly once") {
     val base = java.nio.file.Files.createTempDirectory("scrape_once").toString
-    val subs = (1 to 3).map(i => s"https://x.be/sitemap-classified-$i.xml")
-    val index = subs.map(s => s"<sitemap><loc>$s</loc></sitemap>")
-      .mkString("<sitemapindex>", "", "</sitemapindex>")
-    val listings = subs.indices.map(i => subs(i) -> (1 to 4).map(j =>
-      s"https://www.immoweb.be/en/classified/house/for-sale/gent/9000/${1000 * (i + 1) + j}"))
-    val page = """<html><script>
-      window.classified = {"property":{"type":"HOUSE","subtype":"VILLA",
-        "location":{"locality":"Gent","postalCode":"9000","latitude":51.0,"longitude":3.7}},
-      "transaction":{"sale":{"price":300000},
-        "certificates":{"epcScore":"B","primaryEnergyConsumptionPerSqm":250}}};
-      </script></html>"""
-    val bodies = listings.map { case (sub, urls) =>
-      sub -> urls.map(u => s"""<url><xhtml:link rel="alternate" hreflang="en-BE" href="$u"/></url>""")
-        .mkString("<urlset>", "", "</urlset>")
-    }.toMap ++ listings.flatMap(_._2).map(_ -> page)
+    val (index, bodies) = site((1 to 3).map(k => subUrl(k) -> (1 to 4).map(j => listing(10 * k + j))))
     val fetcher = new UrlCountingFetcher(bodies)
     ScrapeJob.run(spark, s"$base/links", s"$base/properties", index, fetcher,
       java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
@@ -226,14 +215,14 @@ class JobsSpec extends SparkSpec {
 
   test("fetchPages: mapPartitions fetch covers every URL across partitions " +
       "and fetches each exactly once per action") {
-    val counter = new CountingFetcher
-    val urls = (1 to 50).map(i => s"https://x.be/p/$i").toDF("url").repartition(8)
-    val pages = ScrapeJob.fetchPages(urls, counter)
+    val urls = (1 to 50).map(i => s"https://x.be/p/$i")
+    val fetcher = new UrlCountingFetcher(urls.map(u => u -> s"body:$u").toMap)
+    val pages = ScrapeJob.fetchPages(urls.toDF("url").repartition(8), fetcher)
     val got = pages.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got.size == 50)
     assert(got("https://x.be/p/7") == "body:https://x.be/p/7")
     // one action -> each URL fetched exactly once (across 8 partitions)
-    assert(counter.total == 50)
+    assert(fetcher.counts == urls.map(_ -> 1).toMap)
   }
 
   test("PreflightJob: bootstrap (absent store) and valid store pass; " +
@@ -313,6 +302,63 @@ class JobsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$clean/clean.parquet").count() == n)
   }
 
+  test("ExportJob after a crash between its write and its swap: the replay " +
+      "leaves a complete export") {
+    val base = java.nio.file.Files.createTempDirectory("export_crash").toString
+    val (props, csv) = (s"$base/properties", s"$base/export_csv")
+    propertiesFixture.filter(col("id") < 30).write.parquet(props)
+    ExportJob.run(spark, props, csv)
+    propertiesFixture.write.mode("overwrite").parquet(props)
+    // the next export was written complete beside the target, and the
+    // target set aside, when the run died
+    graft.io.ExportCsv.write(spark.read.parquet(props), csv + "__tmp")
+    assert(new java.io.File(csv).renameTo(new java.io.File(csv + "__old")))
+    ExportJob.run(spark, props, csv)
+    val ids = graft.io.ExportCsv.read(spark, csv).select(col("id").cast("long"))
+      .as[Long].collect().toSeq.sorted
+    assert(ids == (0L until 60L))
+    assert(new java.io.File(base).list().toSeq.sorted == Seq("export_csv", "properties"))
+  }
+
+  test("the DAG on the scraper's own store: preflight -> scrape two weeks -> " +
+      "export -> preprocess -> model, and replaying each task changes nothing") {
+    val base = java.nio.file.Files.createTempDirectory("dag").toString
+    val (links, props, csv, clean, model) = (s"$base/links", s"$base/properties",
+      s"$base/export_csv", s"$base/clean", s"$base/model")
+    // week 1 lists houses 1-40; week 2 drops house 1 and lists house 41
+    val (index, week1) = site(Seq(subUrl(1) -> (1 to 40).map(listing(_))))
+    val (_, week2) = site(Seq(subUrl(1) -> (2 to 41).map(listing(_))))
+    def at(day: Int) = java.sql.Timestamp.valueOf(s"2024-06-0$day 00:00:00")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    def csvRows(dir: String) = rows(spark.read.option("header", "true").csv(dir))
+    def state() = (rows(spark.read.parquet(links)), rows(spark.read.parquet(props)))
+    /** Run `task` twice: the replay must leave `outputs` as the run did. */
+    def replayed[A](task: => Unit)(outputs: => A): A = {
+      task
+      val first = outputs
+      task
+      assert(outputs == first)
+      first
+    }
+
+    PreflightJob.run(spark, links, props)
+    ScrapeJob.run(spark, links, props, index, new UrlCountingFetcher(week1), at(1))
+    PreflightJob.run(spark, links, props)
+    replayed(ScrapeJob.run(spark, links, props, index, new UrlCountingFetcher(week2), at(8)))(
+      state())
+    val store = spark.read.parquet(props)
+    assert(store.columns.toSeq == graft.schema.Schemas.properties.fieldNames.toSeq)
+    assert(store.count() == 41) // house 1 stays: the store keeps delisted properties
+    replayed(ExportJob.run(spark, props, csv))(csvRows(csv))
+    assert(graft.io.ExportCsv.read(spark, csv).select(col("id").cast("long")).as[Long]
+      .collect().toSet == store.select("link_id").as[Long].collect().toSet)
+    val cleaned = replayed(PreprocessJob.run(spark, csv, s"$base/no_geocache", clean))(
+      rows(spark.read.parquet(s"$clean/clean.parquet")))
+    assert(cleaned.nonEmpty)
+    val board = replayed(ModelJob.run(spark, clean, model))(csvRows(s"$model/leaderboard"))
+    assert(board.size == 5)
+  }
+
   test("ModelJob fails with a clear error when no feature passes the " +
       "correlation gate") {
     val base = java.nio.file.Files.createTempDirectory("model").toString
@@ -345,21 +391,6 @@ class JobsSpec extends SparkSpec {
     assert(m.size == 3)
     assert(m(("a", "b")) > 0.999 && m(("a", "c")) < -0.99)
   }
-}
-
-/** Counts fetches in a JVM-global so task-side increments are visible to the
-  * driver in local mode. Reset on construction (one instance per test).
-  */
-class CountingFetcher extends graft.ingest.Sitemap.Fetcher {
-  CountingFetcher.count.set(0)
-  def fetch(url: String): String = {
-    CountingFetcher.count.incrementAndGet()
-    "body:" + url
-  }
-  def total: Long = CountingFetcher.count.get().toLong
-}
-object CountingFetcher {
-  val count = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
 /** Serves canned bodies and counts fetches per URL in a JVM-global, so
