@@ -24,6 +24,9 @@ with DAG(
     start_date=datetime(2024, 1, 1),
     schedule_interval="@weekly",       # airflow_auto_model.py:17-19
     catchup=True,
+    # one run at a time: a backfill's runs share the links and properties
+    # dirs, and each commit there assumes it is the only writer
+    max_active_runs=1,
 ) as dag:
     # the reference's workflow verifies the store before scraping
     # (run-scraper.yml:21-43); PreflightJob is that assert as a Spark job

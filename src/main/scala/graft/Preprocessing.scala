@@ -83,26 +83,11 @@ object Preprocessing {
       .withColumn("longitude", CastOps.toNumericCoerce(col("longitude")))
       .withColumn("Province", Province.fromPostalCode(col("Postal_code")))
 
-  /** Barrier 2: geocode fill — cache join first, residual through the
-    * rate-limited client, cache appended once. preprocessing.py:486.
-    */
-  def geocodeStage(df: DataFrame, cache: DataFrame,
-      geocoder: Option[Geocode.Geocoder] = None): (DataFrame, DataFrame) = {
-    val filled = Geocode.fillFromCache(df, cache,
+  /** Geocode fill from the address cache. preprocessing.py:486. */
+  def geocodeStage(df: DataFrame, cache: DataFrame): DataFrame =
+    Geocode.fillFromCache(df, cache,
       street = "street", number = "number",
       locality = "locality_name", postal = "Postal_code")
-    geocoder match {
-      case None => (filled, cache)
-      case Some(g) =>
-        val newEntries = Geocode.geocodeResidual(filled, g,
-          street = "street", number = "number",
-          locality = "locality_name", postal = "Postal_code")
-        val grown = cache.unionByName(newEntries).dropDuplicates("norm_addr")
-        (Geocode.fillFromCache(filled, grown,
-          street = "street", number = "number",
-          locality = "locality_name", postal = "Postal_code"), grown)
-    }
-  }
 
   /** Stage 3: city proximity flags ×3 radii + subtype regroup + House filter.
     * preprocessing.py:499-516.
@@ -263,8 +248,8 @@ object Preprocessing {
   def finalStage(df: DataFrame): DataFrame =
     df.filter(Filters.validCoordinates(col("latitude"), col("longitude")))
 
-  /** The whole chain with default parameters (geocoder absent — cache-only,
-    * as in offline tests).
+  /** The whole chain with default parameters. Geocoding reads the cache
+    * only; no rate-limited client runs.
     *
     * The cleaned frame is persisted across the barriers: the prune, mode,
     * quantile, and encoding aggregates each re-traverse it, and without a
@@ -291,7 +276,7 @@ object Preprocessing {
     val enriched = try {
       val (pruned, _) = pruneStage(cleaned)
       val typed = typeStage(pruned)
-      val (geocoded, _) = geocodeStage(typed, geocodeCache)
+      val geocoded = geocodeStage(typed, geocodeCache)
       // Subtype is consumed by the House filter and then dropped (:517), and
       // the prune re-runs on the filtered frame (:520) — the House subset can
       // exceed the null threshold on columns the full data did not.

@@ -1,5 +1,7 @@
 package graft.io
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,8 +22,14 @@ import org.apache.spark.sql.functions._
   * Everything goes through the Hadoop FileSystem API, so it works on
   * HDFS/S3A as on local disk (java.io.File rename silently no-ops off local
   * disk). Every sibling is derived from the dir's normalized Path, so
-  * `store/` stages at `store__tmp`, never inside itself. A staged dir is
-  * complete iff its writer's `_SUCCESS` marker exists.
+  * `store/` stages at `store__tmp`, never inside itself.
+  *
+  * A staged dir is complete iff its write returned: once `write` returns,
+  * the stage gets a `_SUCCESS` marker unless its writer left one, so a
+  * `DataFrameWriter`, an `MLWriter.save` or an index build that writes
+  * several subdirs all commit alike. A write that throws has its stage
+  * deleted. One writer per target: a second concurrent commit of the same
+  * dir deletes the first one's stage.
   */
 object Commit {
 
@@ -29,6 +37,9 @@ object Commit {
   private val Old = "__old"           // overwrite: the previous state
   private val Appended = "__append"   // append: the new rows
   private val SetAside = "__setaside" // overwriteLeaves: the previous leaves
+  private val Marker = "_SUCCESS"     // in a stage: its write returned
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Whether `dir` holds a committed state, after recovering any commit a
     * crash interrupted. Call it before reading a dir these commits write.
@@ -49,7 +60,7 @@ object Commit {
     *
     * [[exists]] rolls a crash in steps 2-3 forward when `dir__tmp` is
     * complete and back to `dir__old` otherwise. A `write` that throws
-    * leaves `dir` as it was.
+    * leaves `dir` as it was and no `dir__tmp`.
     */
   def overwrite(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
     val (fs, target) = resolve(spark, dir)
@@ -87,8 +98,7 @@ object Commit {
     *
     * Staged append — the rows are committed in three steps:
     *
-    *   1. write them complete to `dir__append` (complete iff its `_SUCCESS`
-    *      marker exists);
+    *   1. write them complete to `dir__append`;
     *   2. rename each data file into `dir` (or, when no store exists yet,
     *      the whole staging dir to `dir`: the first commit is one rename);
     *   3. delete `dir__append`.
@@ -136,10 +146,21 @@ object Commit {
     (target.getFileSystem(spark.sparkContext.hadoopConfiguration), target)
   }
 
-  /** Run `write` into `staged`, deleting a stale stage of a crashed run first. */
+  /** Run `write` into `staged`, deleting a stale stage of a crashed run
+    * first, and mark the stage complete once `write` returns. A stage whose
+    * `write` throws is deleted; a failed delete is logged, and the writer's
+    * exception is the one thrown. */
   private def stage(fs: FileSystem, staged: Path, write: String => Unit): Path = {
     fs.delete(staged, true)
-    write(staged.toString)
+    try write(staged.toString)
+    catch {
+      case t: Throwable =>
+        try fs.delete(staged, true)
+        catch { case NonFatal(e) => log.warn(s"could not delete the failed stage $staged", e) }
+        throw t
+    }
+    val marker = new Path(staged, Marker)
+    if (fs.exists(staged) && !fs.exists(marker)) fs.create(marker).close()
     staged
   }
 
@@ -165,7 +186,7 @@ object Commit {
       // finished, else back to the set-aside state
       val (staged, old) = (target.suffix(Staged), target.suffix(Old))
       val (keep, drop) =
-        if (fs.exists(new Path(staged, "_SUCCESS"))) (staged, old) else (old, staged)
+        if (fs.exists(new Path(staged, Marker))) (staged, old) else (old, staged)
       if (fs.exists(keep)) {
         rename(fs, keep, target)
         fs.delete(drop, true)

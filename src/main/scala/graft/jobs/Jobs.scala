@@ -212,8 +212,6 @@ object ModelJob {
     Commit.overwrite(spark, s"$modelOut/sample_predictions")(
       Models.samplePredictions(winner.model, df, "Price")
         .coalesce(1).write.option("header", "true").csv(_))
-    // in place: MLWriter.save writes no root _SUCCESS, so Commit's
-    // roll-forward gate could never tell a staged model complete
-    winner.model.write.overwrite().save(s"$modelOut/best_model")
+    Commit.overwrite(spark, s"$modelOut/best_model")(winner.model.write.save(_))
   }
 }

@@ -17,9 +17,6 @@ object CastOps {
     */
   def nullToFalse(c: Column): Column = coalesce(c.cast("boolean"), lit(false))
 
-  /** Boolean flag column → 0/1 int (preprocessing.py:91-92). */
-  def boolToInt(c: Column): Column = c.cast("boolean").cast("int")
-
   /** notna() → int flag (preprocessing.py:246-248). */
   def notNullFlag(c: Column): Column = c.isNotNull.cast("int")
 

@@ -27,14 +27,4 @@ object GeoOps {
     sqrt(
       pow(mercatorX(lon1) - mercatorX(lon2), 2) +
       pow(mercatorY(lat1) - mercatorY(lat2), 2))
-
-  /** Haversine ground distance in metres (the "correct" alternative, offered
-    * alongside for callers that want true km radii).
-    */
-  def haversineMeters(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column = {
-    val dLat = radians(lat2 - lat1) / 2
-    val dLon = radians(lon2 - lon1) / 2
-    val a = pow(sin(dLat), 2) + cos(radians(lat1)) * cos(radians(lat2)) * pow(sin(dLon), 2)
-    lit(2 * 6371000.0) * asin(sqrt(a))
-  }
 }

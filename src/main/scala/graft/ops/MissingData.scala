@@ -42,39 +42,4 @@ object MissingData {
     val dropped = df.columns.toSeq.filter(c => fracRow.getAs[Double](c) > threshold)
     (df.drop(dropped: _*), dropped)
   }
-
-  /** pandas `fill_missing_with_stat` (preprocessing.py:364-392): fill nulls in
-    * each listed column with its mode (pandas tie-break: smallest), median
-    * (linear interpolation) or mean. One tiny driver collect per column —
-    * same barrier shape as the reference; row data stays on executors.
-    * Columns absent from the frame are skipped (pandas `if column in df`).
-    */
-  def fillWithStat(df: DataFrame, columns: Seq[String], method: String): DataFrame = {
-    val present = columns.filter(df.columns.contains)
-    if (present.isEmpty) return df
-    method match {
-      case "mode" =>
-        // one groupBy per column is unavoidable for exact modes, but the
-        // fill values apply as a single projection
-        present.foldLeft(df) { (acc, c) =>
-          Aggregates.modeSmallest(acc, c).collect().headOption.map(_.get(0)) match {
-            case Some(v: java.lang.Number) => acc.na.fill(Map(c -> v.doubleValue()))
-            case Some(v)                   => acc.na.fill(Map(c -> v.toString))
-            case None                      => acc
-          }
-        }
-      case "median" | "mean" =>
-        // ONE aggregate pass for every column — not a scan per column
-        val aggs = present.map { c =>
-          val v = col(c).cast("double")
-          (if (method == "median") percentile(v, lit(0.5)) else avg(v)).as(c)
-        }
-        val row = df.agg(aggs.head, aggs.tail: _*).head()
-        val fills = present.flatMap(c =>
-          Option(row.getAs[Any](c)).map(v =>
-            c -> v.asInstanceOf[java.lang.Number].doubleValue())).toMap
-        if (fills.isEmpty) df else df.na.fill(fills)
-      case other => throw new IllegalArgumentException(s"method $other")
-    }
-  }
 }

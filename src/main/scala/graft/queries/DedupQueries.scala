@@ -618,8 +618,7 @@ object DedupQueries extends QueryGroup {
     (s, d) => {
       val docs = Tables.documents(s, d)
       val idxDir = IndexCache.cachedDir(s, s"$d/documents.parquet",
-        IndexCache.tagFor("graft_xsub_v2_", d, xsubContract),
-        "meta/_SUCCESS") { tmpDir =>
+        IndexCache.tagFor("graft_xsub_v2_", d, xsubContract)) { tmpDir =>
         val train = docs.filter(col("doc_id") % 10 =!= 0)
         ExactSubstrIndex.build(train, col("text"), tmpDir, sub = 24,
           buckets = ExactSubstrIndex.adaptiveBuckets(train, 24))
@@ -726,8 +725,7 @@ object DedupQueries extends QueryGroup {
     (s, d) => {
       val docs = Tables.documents(s, d)
       val idxDir = IndexCache.cachedDir(s, s"$d/documents.parquet",
-        IndexCache.tagFor("graft_xsub_v2_", d, xsubContract),
-        "meta/_SUCCESS") { tmpDir =>
+        IndexCache.tagFor("graft_xsub_v2_", d, xsubContract)) { tmpDir =>
         val train = docs.filter(col("doc_id") % 10 =!= 0)
         ExactSubstrIndex.build(train, col("text"), tmpDir, sub = 24,
           buckets = ExactSubstrIndex.adaptiveBuckets(train, 24))

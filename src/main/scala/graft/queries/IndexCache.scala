@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.io.Commit
+
 /** Build-once, content-addressed cache for persisted index artifacts (the
   * q143 saved-IVF pattern, shared by every saved-index query): the cache
   * key is an md5 fingerprint of the SOURCE parquet's file listing
@@ -10,20 +12,18 @@ import org.apache.spark.sql.SparkSession
   * same scale dir gets a fresh index instead of a silently stale one, and
   * stale fingerprints of the same source are garbage-collected.
   *
-  * Builds are crash-safe: the index is built under a unique temp dir and
-  * published by ONE atomic rename; completeness is gated on `successRel`
-  * (a writer _SUCCESS marker) existing inside the published dir, so a
-  * half-written index (crashed build) rebuilds rather than serving partial
-  * data. Two concurrent first runs each build their own temp dir and the
-  * rename loser just discards — no torn shared dir.
+  * The index is published through [[graft.io.Commit.overwrite]]: it counts
+  * as built iff its build returned, so a crashed build rebuilds rather than
+  * serving partial data, and a build that throws leaves nothing behind.
+  * One writer per cache entry: callers run the queries that share a tag
+  * one at a time.
   */
 object IndexCache {
 
-  /** Returns the ready-to-read index dir, building it first if the cached
-    * copy is absent or incomplete. `build` receives the TEMP dir to write
-    * into; the publish rename is handled here. */
-  def cachedDir(s: SparkSession, srcPath: String, tag: String,
-      successRel: String)(build: String => Unit): String = {
+  /** Returns the ready-to-read index dir, building it first if no committed
+    * copy exists. `build` receives the dir to write into. */
+  def cachedDir(s: SparkSession, srcPath: String, tag: String)(
+      build: String => Unit): String = {
     val hconf = s.sparkContext.hadoopConfiguration
     val src = new Path(srcPath)
     val srcFs = src.getFileSystem(hconf)
@@ -34,31 +34,16 @@ object IndexCache {
       java.security.MessageDigest.getInstance("MD5")
         .digest(parts.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
     }
-    val idxBase = sys.props("java.io.tmpdir") + "/" + tag
-    val idxDir = s"${idxBase}_$fp"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create(idxDir), hconf)
-    if (!fs.exists(new Path(s"$idxDir/$successRel"))) {
-      val tmpDir =
-        s"${idxDir}__build_${java.util.UUID.randomUUID().toString.take(8)}"
-      // a failed build must not leave its temp dir behind: the stale-index
-      // GC below deliberately skips __build_ names (a CONCURRENT build's
-      // live temp dir must survive), so orphans would otherwise accumulate
-      try build(tmpDir)
-      catch { case t: Throwable =>
-        fs.delete(new Path(tmpDir), true); throw t
-      }
-      if (!fs.rename(new Path(tmpDir), new Path(idxDir)))
-        fs.delete(new Path(tmpDir), true) // lost the race: winner's index is complete
+    val idxDir = new Path(sys.props("java.io.tmpdir"), s"${tag}_$fp")
+    if (!Commit.exists(s, idxDir.toString)) {
+      Commit.overwrite(s, idxDir.toString)(build)
       // drop stale indexes of the same source (older fingerprints)
-      val parent = new Path(idxDir).getParent
-      val base = new Path(idxBase).getName
-      fs.globStatus(new Path(parent, base + "_*"))
-        .filter(st => st.getPath.getName != s"${base}_$fp" &&
-          !st.getPath.getName.contains("__build_"))
+      val fs = idxDir.getFileSystem(hconf)
+      fs.globStatus(new Path(idxDir.getParent, tag + "_*"))
+        .filter(_.getPath.getName != idxDir.getName)
         .foreach(st => fs.delete(st.getPath, true))
     }
-    idxDir
+    idxDir.toString
   }
 
   /** A scale-dir-derived cache tag: `prefix` + the dir path sanitized to

@@ -132,10 +132,9 @@ object SimQueries extends QueryGroup {
     (s, d) => {
       // Content-fingerprint build-once cache — see [[IndexCache]] (this
       // query's original inline logic, now shared by every saved-index
-      // query: q288's gram index, q290's LSH band index).
+      // query: q264, q288/q296's gram index, q298, q299, q301, q302).
       val idxDir = IndexCache.cachedDir(s, s"$d/embeddings.parquet",
-        IndexCache.tagFor("graft_ivf_v2_", d, "lloyd nLists=8 iters=2"),
-        "cells/_SUCCESS") { tmpDir =>
+        IndexCache.tagFor("graft_ivf_v2_", d, "lloyd nLists=8 iters=2")) { tmpDir =>
         val idx = Similarity.buildIvfIndexLloyd(Tables.embeddings(s, d),
           "vec_id", "embedding", nLists = 8, iters = 2)
         Similarity.saveIvfIndex(idx, tmpDir)
@@ -1334,7 +1333,7 @@ object SimQueries extends QueryGroup {
     (s, d) => {
       // the pre-IndexCache tag (no contract hash): existing caches stay valid
       val idxDir = IndexCache.cachedDir(s, s"$d/embeddings.parquet",
-        IndexCache.tagFor("graft_ivfpq_v1_", d), "codes/_SUCCESS") { tmpDir =>
+        IndexCache.tagFor("graft_ivfpq_v1_", d)) { tmpDir =>
         graft.sim.Pq.saveIvfPqIndex(graft.sim.Pq.buildIvfPqIndex(
           Tables.embeddings(s, d), "vec_id", "embedding", dim = 64, nLists = 8,
           m = 4, ksub = 8, iters = 1), tmpDir)
@@ -1836,8 +1835,7 @@ object SimQueries extends QueryGroup {
       // the k-FORMULA is part of the cache key: changing it (or the
       // assignment contract) must miss the cache, not serve stale cells
       val artDir = IndexCache.cachedDir(s, s"$d/embeddings.parquet",
-        IndexCache.tagFor("graft_hierq_v1_", d, hierQuantizerContract),
-        "meta/_SUCCESS") { tmp =>
+        IndexCache.tagFor("graft_hierq_v1_", d, hierQuantizerContract)) { tmp =>
         // k sizing count runs only on a cache MISS — a cache-hit
         // execution never scans the corpus at all
         val k = math.max(8L,
@@ -1877,7 +1875,7 @@ object SimQueries extends QueryGroup {
           .as("nv"))
       val idxDir = IndexCache.cachedDir(s, s"$d/embeddings.parquet",
         IndexCache.tagFor("graft_e2eann_v1_", d,
-          "l2norm lloyd nLists=8 iters=2"), "cells/_SUCCESS") { tmp =>
+          "l2norm lloyd nLists=8 iters=2")) { tmp =>
         Similarity.saveIvfIndex(Similarity.buildIvfIndexLloyd(
           nrm, "vec_id", "nv", nLists = 8, iters = 2), tmp)
       }

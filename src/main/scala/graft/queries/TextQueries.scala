@@ -629,8 +629,7 @@ object TextQueries extends QueryGroup {
     (s, d) => {
       val docs = Tables.documents(s, d)
       val artDir = IndexCache.cachedDir(s, s"$d/documents.parquet",
-        IndexCache.tagFor("graft_bpe_v1_", d, "merges=8"),
-        "merges/_SUCCESS") { tmpDir =>
+        IndexCache.tagFor("graft_bpe_v1_", d, "merges=8")) { tmpDir =>
         graft.text.Bpe.saveMerges(s,
           graft.text.Bpe.learnMerges(docs, col("text"), 8), s"$tmpDir/merges")
       }
@@ -654,8 +653,7 @@ object TextQueries extends QueryGroup {
       val docs = Tables.documents(s, d)
       val artDir = IndexCache.cachedDir(s, s"$d/documents.parquet",
         IndexCache.tagFor("graft_unigram_v1_", d,
-          "maxPieceLen=4 seedSize=200 vocabSize=48 rounds=2 maxWordLen=16"),
-        "vocab/_SUCCESS") { tmpDir =>
+          "maxPieceLen=4 seedSize=200 vocabSize=48 rounds=2 maxWordLen=16")) { tmpDir =>
         graft.text.Unigram.save(s,
           graft.text.Unigram.learn(docs, col("text"), maxPieceLen = 4,
             seedSize = 200, vocabSize = 48, rounds = 2, maxWordLen = 16),

@@ -31,15 +31,6 @@ object EventStreams {
       .select(col("window.start").as("win_start"), col("window.end").as("win_end"),
         col("event_type"), col("cnt"), col("sum_value"))
 
-  /** Sliding-window variant (windowLen every slide). */
-  def slidingStats(events: DataFrame, windowLen: String = "10 minutes",
-      slide: String = "5 minutes", watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("cnt"))
-
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
   final case class SessionState(start: Long, last: Long, n: Int, total: Double)

@@ -178,9 +178,9 @@ object ExactSubstrIndex {
     */
   def add(spark: SparkSession, dir: String, batch: DataFrame,
       textCol: Column): Long = {
-    val meta = loadMeta(spark, dir)
-    val existing = loadGrams(spark, dir)
     JobLog.phase(spark.sparkContext, s"xsub: add batch -> $dir") {
+      val meta = loadMeta(spark, dir)
+      val existing = loadGrams(spark, dir)
       // r14: the novelty anti join keys on (h, g) instead of g alone —
       // h = gramHash64(g) on BOTH sides, so the join relation is unchanged
       // (h equality is implied by g equality), but the sort-merge now

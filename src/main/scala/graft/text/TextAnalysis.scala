@@ -317,11 +317,6 @@ object TextAnalysis {
         lit(0.3) * least(lit(1.0), stopHits * 10.0 / n), 6)
   }
 
-  /** Punctuation ratio (chars outside [\p{L}\p{N}\s] over all chars). */
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[^\\p{L}\\p{N}\\s]", "")))
-      .cast("double") / length(text)
-
   /** Unigram-LM negative log-likelihood per document — the CCNet-style
     * perplexity proxy: train a unigram model on the corpus itself (token
     * frequencies), score each document by its length-normalized NLL

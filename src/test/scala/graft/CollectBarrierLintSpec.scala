@@ -17,7 +17,6 @@ class CollectBarrierLintSpec extends AnyFunSuite {
     * The comment states each site's bound. */
   private val audited: Map[String, Int] = Map(
     "ops/Merge.scala" -> 1,        // touched-partition values (≤#partitions)
-    "ops/MissingData.scala" -> 1,  // per-column null fractions (≤#columns)
     "ops/Skyline.scala" -> 1,      // per-partition y-minima (≤#partitions)
     "ops/Drift.scala" -> 1,        // jsdPairs' group list (≤#groups)
     "ops/RangeScan.scala" -> 1,    // per-(pid, key) prefix totals (≤partitions·#keys)

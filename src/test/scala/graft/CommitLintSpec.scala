@@ -10,8 +10,17 @@ class CommitLintSpec extends AnyFunSuite {
   private def filesWith(needle: String): List[String] =
     SourceScan.filesWhere("src/main/scala/graft")(_.contains(needle))
 
-  test("only io/Commit.scala and IndexCache's content-addressed publish rename") {
-    assert(filesWith(".rename(") == List("io/Commit.scala", "queries/IndexCache.scala"))
+  test("only io/Commit.scala renames") {
+    assert(filesWith(".rename(") == List("io/Commit.scala"))
+  }
+
+  test("only io/Commit.scala names the _SUCCESS marker") {
+    assert(filesWith("_SUCCESS") == List("io/Commit.scala"))
+  }
+
+  test("no job writes in place") {
+    for (needle <- Seq(".write.overwrite()", "mode(\"overwrite\")"))
+      assert(filesWith(needle).filter(_.startsWith("jobs/")) == Nil, needle)
   }
 
   test("the commit siblings are named only in io/Commit.scala") {

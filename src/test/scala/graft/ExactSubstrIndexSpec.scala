@@ -88,6 +88,17 @@ class ExactSubstrIndexSpec extends SparkSpec {
     assert(ExactSubstrIndex.add(spark, incDir, b, col("text")) == 0L)
   }
 
+  test("every job add launches, the meta read included, carries the add label") {
+    val dir = tmpDir("addlabel")
+    ExactSubstrIndex.build(trainDocs.filter(col("doc_id") <= 2), col("text"), dir,
+      sub = 24, buckets = 8)
+    val (_, jobs) = graft.obs.JobLog.during(spark) {
+      ExactSubstrIndex.add(spark, dir, trainDocs.filter(col("doc_id") > 2), col("text"))
+    }
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_.label == s"xsub: add batch -> $dir"), jobs)
+  }
+
   test("streaming contamMatches == batch replay (stream-static semi join)") {
     val dir = tmpDir("stream")
     ExactSubstrIndex.build(trainDocs, col("text"), dir, sub = 24, buckets = 8)

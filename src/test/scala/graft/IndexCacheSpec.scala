@@ -35,15 +35,13 @@ class IndexCacheSpec extends SparkSpec {
     var builds = 0
     def run(contract: String): String =
       IndexCache.cachedDir(spark, s"$base/src.parquet",
-        IndexCache.tagFor("graft_idxcache_spec_", base, contract),
-        "meta/_SUCCESS") { tmp =>
+        IndexCache.tagFor("graft_idxcache_spec_", base, contract)) { dir =>
         builds += 1
-        val m = new java.io.File(s"$tmp/meta")
-        assert(m.mkdirs())
-        assert(new java.io.File(m, "_SUCCESS").createNewFile())
+        assert(new java.io.File(s"$dir/meta").mkdirs())
       }
     val d1 = run("k=ceil(n/64)")
     assert(builds == 1)
+    assert(new java.io.File(s"$d1/meta").isDirectory)
     val d1again = run("k=ceil(n/64)")
     assert(builds == 1, "unchanged contract must not rebuild")
     assert(d1again == d1)
@@ -54,34 +52,28 @@ class IndexCacheSpec extends SparkSpec {
     assert(run("k=ceil(n/64)") == d1 && builds == 2)
   }
 
-  test("cachedDir: a build that THROWS deletes its temp dir (no orphan " +
-      "__build_ dirs) and the next call rebuilds cleanly") {
+  test("cachedDir: a build that THROWS leaves nothing under the tag, and " +
+      "the next call rebuilds") {
     val base = java.nio.file.Files.createTempDirectory("idxcachefail").toString
     Seq((1L, "a")).toDF("id", "t").write.parquet(s"$base/src.parquet")
     val tag = IndexCache.tagFor("graft_idxcache_failspec_", base)
-    def buildDirs(): Seq[String] = {
-      val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-      tmp.list().toSeq.filter(n => n.startsWith(tag) && n.contains("__build_"))
-    }
+    def entries(): Seq[String] =
+      new java.io.File(sys.props("java.io.tmpdir")).list().toSeq.filter(_.startsWith(tag))
     val boom = intercept[RuntimeException] {
-      IndexCache.cachedDir(spark, s"$base/src.parquet", tag,
-        "meta/_SUCCESS") { tmp =>
-        assert(new java.io.File(s"$tmp/meta").mkdirs())
+      IndexCache.cachedDir(spark, s"$base/src.parquet", tag) { dir =>
+        assert(new java.io.File(s"$dir/meta").mkdirs())
         throw new RuntimeException("simulated build crash")
       }
     }
     assert(boom.getMessage == "simulated build crash")
-    assert(buildDirs().isEmpty,
-      s"failed build left temp dirs behind: ${buildDirs()}")
+    assert(entries().isEmpty, s"failed build left entries behind: ${entries()}")
     var built = false
-    val dir = IndexCache.cachedDir(spark, s"$base/src.parquet", tag,
-      "meta/_SUCCESS") { tmp =>
+    val dir = IndexCache.cachedDir(spark, s"$base/src.parquet", tag) { dir =>
       built = true
-      val m = new java.io.File(s"$tmp/meta")
-      assert(m.mkdirs())
-      assert(new java.io.File(m, "_SUCCESS").createNewFile())
+      assert(new java.io.File(s"$dir/meta").mkdirs())
     }
     assert(built, "the failed attempt must not poison the cache slot")
-    assert(new java.io.File(s"$dir/meta/_SUCCESS").exists())
+    assert(new java.io.File(s"$dir/meta").isDirectory)
+    assert(entries() == Seq(new java.io.File(dir).getName))
   }
 }

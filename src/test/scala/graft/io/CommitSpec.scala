@@ -2,6 +2,8 @@ package graft.io
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -56,6 +58,57 @@ class CommitSpec extends SparkSpec {
     assert(Commit.exists(spark, dir))
     assert(files(dir) == before)
     assert(spark.read.parquet(dir).as[Int].collect().toSeq.sorted == Seq(1, 2, 3))
+    assert(!new java.io.File(dir + "__tmp").exists())
+  }
+
+  test("a writer that leaves no _SUCCESS commits, and a crash between its " +
+      "write and its swap rolls forward") {
+    val base = tempDir("commit_plain")
+    val dir = s"${CrashingFs.Scheme}://$base/t"
+    CrashingFs.register(spark)
+    /** Writes one plain file under the path it is given, and no marker. */
+    def plain(body: String)(path: String): Unit = {
+      val p = new Path(path)
+      val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(new Path(p, "part"))
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    def part() = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(base, "t", "part")), "UTF-8")
+    Commit.overwrite(spark, dir)(plain("v1"))
+    assert(Commit.exists(spark, dir) && part() == "v1")
+    CrashingFs.crashingRenameOf("t__tmp") {
+      intercept[java.io.IOException](Commit.overwrite(spark, dir)(plain("v2")))
+    }
+    assert(children(base) == Seq("t__old", "t__tmp"))
+    assert(Commit.exists(spark, dir))
+    assert(children(base) == Seq("t"))
+    assert(part() == "v2")
+  }
+}
+
+/** The local file system under the scheme `crashfs`, whose rename of a path
+  * named [[CrashingFs.crashingRenameOf]]'s `name` throws, as if the process
+  * died just before it: a writer's crash injected at one commit step. */
+class CrashingFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${CrashingFs.Scheme}:///")
+  override def getScheme: String = CrashingFs.Scheme
+  override def rename(src: Path, dst: Path): Boolean =
+    if (CrashingFs.failing.contains(src.getName))
+      throw new java.io.IOException(s"crashed before renaming $src")
+    else super.rename(src, dst)
+}
+
+object CrashingFs {
+  val Scheme = "crashfs"
+  @volatile private var failing: Option[String] = None
+
+  def register(spark: SparkSession): Unit =
+    spark.sparkContext.hadoopConfiguration.set(s"fs.$Scheme.impl", classOf[CrashingFs].getName)
+
+  /** Run `body` with every rename of a path named `name` crashing. */
+  def crashingRenameOf[A](name: String)(body: => A): A = {
+    failing = Some(name)
+    try body finally failing = None
   }
 }
 

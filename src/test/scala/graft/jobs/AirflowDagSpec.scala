@@ -17,4 +17,9 @@ class AirflowDagSpec extends AnyFunSuite {
       assert(module.getMethod("main", classOf[Array[String]]).getReturnType == Void.TYPE, name)
     }
   }
+
+  test("the DAG runs one instance at a time: catchup runs share the stores") {
+    val dag = java.nio.file.Files.readString(java.nio.file.Paths.get("airflow/immo_pipeline_dag.py"))
+    assert("""(?m)^\s*max_active_runs=1,""".r.findFirstIn(dag).nonEmpty)
+  }
 }

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.io.Commit
+import graft.io.{Commit, CrashingFs}
 import graft.io.CommitSpec.files
 
 class JobsSpec extends SparkSpec {
@@ -357,6 +357,35 @@ class JobsSpec extends SparkSpec {
     assert(cleaned.nonEmpty)
     val board = replayed(ModelJob.run(spark, clean, model))(csvRows(s"$model/leaderboard"))
     assert(board.size == 5)
+  }
+
+  test("ModelJob's best_model: a crash between its write and its swap rolls " +
+      "forward, a crash mid-write rolls back, and the replay leaves a loadable " +
+      "model and no sibling dirs") {
+    val base = java.nio.file.Files.createTempDirectory("model_crash").toString
+    (1 to 40).map(i => (80.0 + 7 * i, 2000.0 * (80 + 7 * i) + (i % 5) * 3000, 2 + i % 3))
+      .toDF("Living_area", "Price", "Number_of_facades")
+      .write.parquet(s"$base/clean/clean.parquet")
+    val best = s"$base/model/best_model"
+    def load() = org.apache.spark.ml.PipelineModel.load(best)
+    CrashingFs.register(spark)
+    CrashingFs.crashingRenameOf("best_model__tmp") {
+      intercept[java.io.IOException](
+        ModelJob.run(spark, s"$base/clean", s"${CrashingFs.Scheme}://$base/model"))
+    }
+    // MLWriter.save leaves no _SUCCESS: only Commit's own marker rolls it forward
+    assert(Commit.exists(spark, best))
+    load()
+    val committed = files(best)
+    // an unfinished stage (no marker) beside the set-aside model rolls back
+    assert(new java.io.File(best).renameTo(new java.io.File(best + "__old")))
+    assert(new java.io.File(best + "__tmp/metadata").mkdirs())
+    assert(Commit.exists(spark, best))
+    assert(files(best) == committed)
+    ModelJob.run(spark, s"$base/clean", s"$base/model")
+    load()
+    assert(new java.io.File(s"$base/model").list().toSeq.sorted ==
+      Seq("best_model", "leaderboard", "sample_predictions"))
   }
 
   test("ModelJob fails with a clear error when no feature passes the " +
